@@ -76,7 +76,7 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       System.gc()
     }
-    val results = SparkEntry.queries.toSeq
+    val outcomes = SparkEntry.queries.toSeq
       .filter(kv => only.forall(_.contains(kv._1)))
       .sortBy(_._1)
       .map { case (name, fn) =>
@@ -92,10 +92,20 @@ object Bench {
       val t0 = System.nanoTime()
       // toRdd.count() executes the FULL physical plan (projections,
       // sorts, windows) — a plain .count() would let Catalyst prune
-      // every map-only query down to a parquet row count.
-      try { fn(spark, sfDir).queryExecution.toRdd.count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
+      // every map-only query down to a parquet row count. A failed
+      // key is reported, never timed: its elapsed time would read as
+      // a (fast) result.
+      try {
+        fn(spark, sfDir).queryExecution.toRdd.count()
+        Right(name -> (System.nanoTime() - t0) / 1e9)
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"bench query '$name' failed: ${e.getClass.getName}: ${e.getMessage}")
+          Left(name -> e.getClass.getName)
+      }
     }
+    val results = outcomes.collect { case Right(r) => r }
+    val failed  = outcomes.collect { case Left(f) => f }
     // Locale.ROOT: the f-interpolator honors the JVM default locale,
     // and a comma decimal separator would corrupt the JSON
     def fmt(v: Double): String =
@@ -110,7 +120,9 @@ object Bench {
     // bounded capture — harmless, no "metric" token survives the cut),
     // (3) a compact line with the total plus the slowest 25 queries
     // that ALWAYS fits the tail window and parses as the result.
-    val full = s"""{"all_queries":${mapJson(results)},"sf":"$sfDir"}"""
+    val failedJson =
+      failed.map { case (k, cls) => "\"" + k + "\":\"" + cls + "\"" }.mkString("{", ",", "}")
+    val full = s"""{"all_queries":${mapJson(results)},"failed":$failedJson,"sf":"$sfDir"}"""
     java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_DETAIL.json"),
       (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)

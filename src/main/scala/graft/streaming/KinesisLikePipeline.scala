@@ -781,8 +781,12 @@ object KinesisLikePipeline {
       numRows: Long = 10000L,
       rowsPerBatch: Long = 2500L
   ): DataFrame = {
-    val tmp    = java.nio.file.Files.createTempDirectory("graft-stream-store").toString
+    // the store outlives this call (the returned frame reads it
+    // lazily), so it is removed at JVM exit; the checkpoint is not
+    // read again after an AvailableNow drain and goes right away
+    val tmp    = graft.operators.Ingest.scratchDir("graft-stream-store")
     val outDir = s"$tmp/store"
+    val ckpt   = java.nio.file.Paths.get(tmp, "ckpt")
     val records = spark.readStream
       .format("graft.sources.ProblemSource")
       .option("numRows", numRows)
@@ -790,12 +794,13 @@ object KinesisLikePipeline {
       .option("rowsPerBatch", rowsPerBatch)
       .load()
     val answered = addAnswers(decodeEnvelope(records), keyCol = "seq")
-    // 16 prefixes at this volume — see contentAddressedSink's sizing note
-    StreamIO
-      .contentAddressedSink(answered, outDir, s"$tmp/ckpt", availableNow = true, prefixChars = 1)
-      .awaitTermination()
-    // explicit schema pins key_prefix (a partition directory column) to
-    // string — inference would read all-digit prefixes back as ints
+    // key_prefix is the digest's first hex char, one of 16 values
+    val q = StreamIO
+      .contentAddressedSink(answered, outDir, ckpt.toString, availableNow = true, prefixChars = 1)
+    try q.awaitTermination()
+    finally StreamReplay.deleteTree(ckpt)
+    // explicit schema: no footer is read to infer it, and a drain that
+    // committed no rows still returns a typed, empty frame
     StreamIO
       .readContentAddressed(
         spark,

@@ -10,14 +10,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * | reference                          | here                               |
   * | ---------------------------------- | ---------------------------------- |
   * | Kinesis producer (kinesis_stream/main.go:24-37) | [[mathProblemStream]] rate-source envelope stream |
-  * | S3 content-addressed put (adder-labma/adder.go:58-76) | [[contentAddressedSink]] prefix-partitioned parquet |
+  * | S3 content-addressed put (adder-labma/adder.go:58-76) | [[contentAddressedSink]] key-sorted parquet per micro-batch |
   * | SQS SendMessageBatch of 10 (lambda_page/lpage.go:135-146) | [[batchedQueueSink]] fixed-size JSON batch lines |
   *
   * The reference writes ONE S3 object PER RECORD — at 100 TB that is
   * billions of tiny puts, the canonical small-object anti-pattern. The
   * scalable translation keeps the content-addressed KEY (a column) but
-  * stores records in prefix-partitioned parquet: lookup by key is a
-  * partition-pruned scan, writes are batched columnar appends.
+  * stores each micro-batch as key-sorted parquet: writes are batched
+  * columnar appends (one file per batch at small volume), and a lookup
+  * by key skips row groups on parquet's min/max statistics.
   */
 object StreamIO {
 
@@ -43,22 +44,23 @@ object StreamIO {
         ).as("data")
       )
 
-  /** S3-analog sink: stream rows into parquet partitioned by the
+  /** S3-analog sink: stream rows into parquet, one `b<batchId>`
+    * directory per micro-batch, with a `key_prefix` column holding the
     * first `prefixChars` hex chars of `result_key`'s digest (the same
-    * fan-out trick S3 key design uses). Exactly-once: the parquet
-    * commit protocol dedups TASK retries, and each micro-batch owns
-    * its own overwrite-mode subdirectory so a BATCH replay after a
-    * crash-restart (sink write done, checkpoint commit lost)
-    * overwrites instead of double-appending — the same rule as the
-    * queue sink and the drain harness. Read the output back with
-    * [[readContentAddressed]] (per-batch dirs, prefix partitions
-    * inside).
+    * fan-out trick S3 key design uses). Rows are clustered by
+    * `key_prefix` and sorted by (`key_prefix`, `result_key`) inside
+    * each file, so a key or prefix lookup prunes on parquet's min/max
+    * statistics rather than on directories. A batch dir holds one file
+    * per post-shuffle partition — one at small volume, more only when
+    * the batch is large — never one per prefix: each file a task
+    * creates costs a commit (a PUT on S3) whatever its size.
     *
-    * Size `prefixChars` to the volume: every micro-batch pays file +
-    * commit overhead per touched prefix directory (measured ~2.6 s
-    * per 256-way batch vs 0.6 s per 16-way at 10k rows), so use 1
-    * (16 prefixes) until per-prefix files reach a healthy parquet
-    * size, 2 (256) at production volume.
+    * Exactly-once: the parquet commit protocol dedups TASK retries,
+    * and each micro-batch owns its own overwrite-mode subdirectory so
+    * a BATCH replay after a crash-restart (sink write done, checkpoint
+    * commit lost) overwrites instead of double-appending — the same
+    * rule as the queue sink and the drain harness. Read the output
+    * back with [[readContentAddressed]].
     */
   def contentAddressedSink(
       answered: DataFrame,
@@ -79,26 +81,27 @@ object StreamIO {
             "key_prefix",
             substring(regexp_replace(col("result_key"), "^(add|multi)-", ""), 1, prefixChars)
           )
-          // cluster by prefix before the partitioned write: without it
-          // every TASK opens a file per prefix it touches (tasks ×
-          // prefixes tiny files per batch); with it each prefix's rows
-          // land in one task's one file
+          // cluster by prefix so each prefix's rows land in one task,
+          // then sort so every file is ordered by key: a prefix or key
+          // filter then prunes row groups on min/max statistics
           .repartition(col("key_prefix"))
+          .sortWithinPartitions("key_prefix", "result_key")
           .write
           .mode("overwrite")
-          .partitionBy("key_prefix")
           .parquet(s"$outDir/b$batchId")
       }
       .start()
   }
 
   /** Read a [[contentAddressedSink]] output dir: per-batch `b<id>`
-    * subdirectories, each prefix-partitioned inside. Each batch dir is
-    * its own partition-discovery root (so `key_prefix` survives as a
-    * column — a recursive file lookup would drop it, and one glob read
-    * trips CONFLICTING_DIRECTORY_STRUCTURES), unioned by name. The
-    * driver-side dir listing is bounded by BATCH COUNT, never data
-    * volume — the content store's per-manifest-loop class.
+    * subdirectories, read together in ONE parquet scan, so a filter on
+    * `key_prefix` or `result_key` is pushed into that scan. Batch dirs
+    * of the older prefix-partitioned layout (`key_prefix=<p>`
+    * subdirectories) cannot share the scan: a root with such a dir
+    * and any other batch dir fails partition discovery with
+    * CONFLICTING_DIRECTORY_STRUCTURES. The driver-side dir listing is
+    * bounded by BATCH COUNT, never data volume — the content store's
+    * per-manifest-loop class.
     */
   def readContentAddressed(
       spark: SparkSession,
@@ -111,10 +114,9 @@ object StreamIO {
     // work — driver-local java.io.File would only see the local disk
     val root = new Path(outDir)
     val fs   = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // an empty micro-batch leaves a b<id> dir with only _SUCCESS
-    // (partitionBy with zero rows emits no part files) — schema
-    // inference would fail on it, so batch dirs without parquet part
-    // files are skipped; they carry no rows either way
+    // a b<id> dir with no parquet part files (only _SUCCESS, as a
+    // row-less partitioned write leaves) would fail schema inference,
+    // so such dirs are skipped; they carry no rows either way
     def hasParquet(p: Path): Boolean = {
       val it = fs.listFiles(p, true)
       var found = false
@@ -148,7 +150,7 @@ object StreamIO {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(ddl)
       )
-    } else dirs.map(reader.parquet(_)).reduce(_.unionByName(_))
+    } else reader.parquet(dirs: _*)
   }
 
   /** SQS-analog sink: within each micro-batch, rows are grouped into

@@ -164,7 +164,7 @@ object StreamReplay {
     */
   private val drainCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
-  private def deleteTree(p: Path): Unit =
+  private[streaming] def deleteTree(p: Path): Unit =
     if (Files.exists(p)) {
       import scala.jdk.CollectionConverters._
       val us = Files.walk(p)

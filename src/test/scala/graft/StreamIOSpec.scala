@@ -10,7 +10,7 @@ class StreamIOSpec extends SparkSpecBase {
 
   private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
 
-  test("content-addressed sink lands decoded answers in prefix-partitioned parquet") {
+  test("content-addressed sink lands decoded answers in key-sorted parquet") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in  = MemoryStream[(String, String)]
@@ -33,6 +33,72 @@ class StreamIOSpec extends SparkSpecBase {
     assert(rows.filter(col("answer") === "30 + 12 = 42").count() == 1)
   }
 
+  /** Drain 600 ProblemSource rows (three micro-batches) into a
+    * content-addressed sink and return its output dir.
+    */
+  private def drainToSink(prefixChars: Int): String = {
+    val out = tmp("graft-s3-layout")
+    val records = spark.readStream
+      .format("graft.sources.ProblemSource")
+      .option("numRows", 600)
+      .option("numPartitions", 4)
+      .option("rowsPerBatch", 200)
+      .load()
+    StreamIO
+      .contentAddressedSink(
+        KinesisLikePipeline.addAnswers(KinesisLikePipeline.decodeEnvelope(records), keyCol = "seq"),
+        out,
+        tmp("graft-s3-layout-ckpt"),
+        availableNow = true,
+        prefixChars = prefixChars
+      )
+      .awaitTermination()
+    out
+  }
+
+  test("content-addressed sink writes key-sorted files per batch and pushes prefix filters") {
+    import scala.jdk.CollectionConverters._
+    def ls(p: java.nio.file.Path): List[java.nio.file.Path] = {
+      val s = Files.list(p)
+      try s.iterator().asScala.toList finally s.close()
+    }
+    val out     = drainToSink(prefixChars = 1)
+    val batches = ls(java.nio.file.Paths.get(out)).filter(_.getFileName.toString.matches("b\\d+"))
+    assert(batches.size == 3, s"expected three batch dirs, got $batches")
+    batches.foreach { b =>
+      val children = ls(b)
+      assert(!children.exists(_.getFileName.toString.startsWith("key_prefix=")),
+        s"$b still holds prefix partition dirs")
+      val files = children.filter(_.getFileName.toString.endsWith(".parquet"))
+      assert(files.nonEmpty, s"$b holds no parquet file")
+      files.foreach { f =>
+        val keys = spark.read.parquet(f.toString).select("key_prefix", "result_key").collect()
+          .map(r => (r.getString(0), r.getString(1))).toSeq
+        assert(keys == keys.sorted, s"$f is not ordered by (key_prefix, result_key)")
+      }
+    }
+
+    val all = StreamIO.readContentAddressed(spark, out)
+      .select("seq", "result_key").collect().map(r => (r.getLong(0), r.getString(1)))
+    assert(all.map(_._1).sorted.toSeq == (0L until 600L))
+    val prefixA = StreamIO.readContentAddressed(spark, out).filter(col("key_prefix") === "a")
+    val plan    = prefixA.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters:") && plan.contains("EqualTo(key_prefix,a)"),
+      s"prefix filter not pushed into the parquet scan:\n$plan")
+    val expected = all.filter(_._2.stripPrefix("add-").startsWith("a")).map(_._1).toSet
+    assert(expected.nonEmpty)
+    assert(prefixA.select("seq").collect().map(_.getLong(0)).toSet == expected)
+  }
+
+  test("content-addressed sink round-trips at the default 2-char prefix width") {
+    val rows = StreamIO.readContentAddressed(spark, drainToSink(prefixChars = 2))
+      .select("seq", "result_key", "key_prefix").collect()
+    assert(rows.map(_.getLong(0)).sorted.toSeq == (0L until 600L))
+    rows.foreach { r =>
+      assert(r.getString(2) == r.getString(1).stripPrefix("add-").take(2), s"bad key_prefix in $r")
+    }
+  }
+
   test("content-addressed read: empty sink output and row-less batch dirs degrade gracefully") {
     val out = tmp("graft-s3-empty")
     val ddl = "result_key STRING, answer STRING, key_prefix STRING"
@@ -41,9 +107,8 @@ class StreamIOSpec extends SparkSpecBase {
     assert(none.count() == 0 && none.columns.toSet == Set("result_key", "answer", "key_prefix"))
     // a missing root behaves the same (a sink that never committed)
     assert(StreamIO.readContentAddressed(spark, s"$out/never-created", Some(ddl)).count() == 0)
-    // an empty micro-batch leaves b<id> with only _SUCCESS (partitionBy
-    // with zero rows writes no part files) — it must be skipped, not
-    // fed to the per-dir reader where schema inference would throw
+    // a b<id> with only _SUCCESS (a row-less partitioned write) must be
+    // skipped, not fed to the reader where schema inference would throw
     val b0 = new java.io.File(s"$out/b0"); b0.mkdirs()
     new java.io.File(b0, "_SUCCESS").createNewFile()
     assert(StreamIO.readContentAddressed(spark, out, Some(ddl)).count() == 0)

@@ -114,9 +114,23 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("DSv2 stream → decode → add → content store is exact end to end") {
+    import scala.jdk.CollectionConverters._
+    val tmpRoot = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def storeDirs(): Set[java.nio.file.Path] = {
+      val s = Files.list(tmpRoot)
+      try s.iterator().asScala.filter(_.getFileName.toString.startsWith("graft-stream-store")).toSet
+      finally s.close()
+    }
+    val before = storeDirs()
     val rows = KinesisLikePipeline
       .problemStreamToStore(spark, numRows = 400, rowsPerBatch = 150)
       .collect()
+    // the drain's checkpoint is gone once it returns; the store stays
+    // until JVM exit because the returned frame reads it lazily
+    val created = storeDirs() -- before
+    assert(created.size == 1, s"expected one new store temp dir, got $created")
+    assert(!Files.exists(created.head.resolve("ckpt")), "drain checkpoint left behind")
+    assert(Files.isDirectory(created.head.resolve("store")))
     assert(rows.length == 400)
     val r7 = rows(7)
     assert(r7.getAs[Long]("seq") == 7L)
