@@ -21,6 +21,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object MathOps {
 
+  /** The `{Num1, Num2}` problem payload inside a Kinesis record's data. */
+  private val payloadSchema = StructType(
+    Seq(StructField("Num1", LongType), StructField("Num2", LongType))
+  )
+
   /** Derive the {Num1, Num2} problem stream deterministically from the
     * events table (kinesis_stream/main.go:24-27 uses rand 0..99).
     */
@@ -60,9 +65,6 @@ object MathOps {
     * generation happening executor-side.
     */
   def dsv2Problems(spark: org.apache.spark.sql.SparkSession, numRows: Long = 10000L): DataFrame = {
-    val payloadSchema = StructType(
-      Seq(StructField("Num1", LongType), StructField("Num2", LongType))
-    )
     spark.read
       .format("graft.sources.ProblemSource")
       .option("numRows", numRows)
@@ -167,19 +169,12 @@ object MathOps {
       .orderBy("event_id")
   }
 
-  private val payloadSchema = StructType(
-    Seq(StructField("Num1", LongType), StructField("Num2", LongType))
-  )
-
   /** A3: Kinesis-envelope round trip — build the base64(JSON) record
     * the way a producer would (kinesis_stream/main.go:28-37), then
     * decode it the way the lambda does (adder-labma/types.go:3-19,
     * adder.go:38-44): unbase64 → from_json → typed fields.
     */
   def kinesisDecode(t: Tables): DataFrame = {
-    val payloadSchema = StructType(
-      Seq(StructField("Num1", LongType), StructField("Num2", LongType))
-    )
     val enveloped = t.events.select(
       col("event_id"),
       col("user_id").cast("string").as("partition_key"),

@@ -1,18 +1,24 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Typed accessors for the test corpus (TPC-H-ish star schema plus an
   * `events` stream table and `documents`/`embeddings` for the
   * LLM-pipeline operators).
   *
-  * All loads are plain parquet scans so Catalyst can push filters and
-  * prune columns into the file scan — operators must NOT cache or
-  * materialize here; each query should present one end-to-end logical
-  * plan to the optimizer.
-  */
-/** @param docsOverride substitute `documents` frame (same schema) — the
+  * Each table is resolved at most once per instance: the first access
+  * lists its file and infers the parquet footer schema (a Spark job),
+  * and every later access reuses that `HadoopFsRelation`. No data is
+  * ever cached or materialized, and each access returns a new
+  * `LogicalRelation` with fresh attribute ids, so Catalyst still pushes
+  * filters and prunes columns into the file scan, and a self-join
+  * through two accesses resolves as it would over two reads. The file
+  * listing is fixed at resolution: to see files rewritten under `dir`,
+  * build a new `Tables`.
+  *
+  * @param docsOverride substitute `documents` frame (same schema) — the
   *   versioned-release operators run the WHOLE curation/release chain
   *   over a simulated corpus version by overriding the one input
   *   rather than threading a frame through every stage signature;
@@ -24,15 +30,34 @@ final case class Tables(
     dir: String,
     docsOverride: Option[DataFrame] = None
 ) {
-  private def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  /** Lists `name`'s file and infers its schema, exactly as a plain
+    * `spark.read.parquet` does.
+    */
+  private def resolve(name: String): HadoopFsRelation =
+    spark.read.parquet(s"$dir/$name.parquet").queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r
+    }.get
 
-  def region: DataFrame     = t("region")
-  def nation: DataFrame     = t("nation")
-  def customer: DataFrame   = t("customer")
-  def supplier: DataFrame   = t("supplier")
-  def part: DataFrame       = t("part")
-  def orders: DataFrame     = t("orders")
-  def lineitem: DataFrame   = t("lineitem")
+  @transient private lazy val regionRel     = resolve("region")
+  @transient private lazy val nationRel     = resolve("nation")
+  @transient private lazy val customerRel   = resolve("customer")
+  @transient private lazy val supplierRel   = resolve("supplier")
+  @transient private lazy val partRel       = resolve("part")
+  @transient private lazy val ordersRel     = resolve("orders")
+  @transient private lazy val lineitemRel   = resolve("lineitem")
+  @transient private lazy val eventsRel     = resolve("events")
+  @transient private lazy val documentsRel  = resolve("documents")
+  @transient private lazy val embeddingsRel = resolve("embeddings")
+
+  private def t(rel: HadoopFsRelation): DataFrame = spark.baseRelationToDataFrame(rel)
+
+  def region: DataFrame     = t(regionRel)
+  def nation: DataFrame     = t(nationRel)
+  def customer: DataFrame   = t(customerRel)
+  def supplier: DataFrame   = t(supplierRel)
+  def part: DataFrame       = t(partRel)
+  def orders: DataFrame     = t(ordersRel)
+  def lineitem: DataFrame   = t(lineitemRel)
   /** events.parquet has shipped with two ts layouts: TIMESTAMP(NANOS)
     * (which Spark 4's vectorized reader rejects — read nanos as long
     * via the legacy conf and rebuild a microsecond timestamp) and
@@ -42,7 +67,7 @@ final case class Tables(
     */
   def events: DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = t("events")
+    val df = t(eventsRel)
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -60,12 +85,12 @@ final case class Tables(
     * triggers, so no shuffle is added where the scan already
     * parallelizes.
     */
-  private def rebalanced(name: String): DataFrame = {
-    val df    = t(name)
+  private def rebalanced(rel: HadoopFsRelation): DataFrame = {
+    val df    = t(rel)
     val cores = spark.sparkContext.defaultParallelism
-    if (df.inputFiles.length < cores / 2) df.repartition(cores) else df
+    if (rel.inputFiles.length < cores / 2) df.repartition(cores) else df
   }
 
-  def documents: DataFrame  = docsOverride.getOrElse(rebalanced("documents"))
-  def embeddings: DataFrame = rebalanced("embeddings")
+  def documents: DataFrame  = docsOverride.getOrElse(rebalanced(documentsRel))
+  def embeddings: DataFrame = rebalanced(embeddingsRel)
 }
