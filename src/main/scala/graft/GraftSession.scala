@@ -36,4 +36,20 @@ object GraftSession {
     graft.plans.KeyDistinct.install(spark)
     spark
   }
+
+  /** Run `body` with the given session confs set, then put each key
+    * back exactly as it was: re-set if the caller had set it, unset
+    * otherwise. The snapshot is `spark.conf.getAll`, which holds only
+    * explicitly set keys — `getOption(k)` / `get(k, default)` would
+    * return the registered default for an unset key, and restoring
+    * that leaves the key explicitly set after the call.
+    */
+  private[graft] def withConfs[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val before = spark.conf.getAll
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally confs.foreach { case (k, _) =>
+      before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
 }

@@ -828,17 +828,9 @@ object SparkEntry {
           .toDF())
   }
 
-  private def withRocksDb[T](s: SparkSession)(body: => T): T = {
-    val key  = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None    => s.conf.unset(key)
-    }
-  }
+  private def withRocksDb[T](s: SparkSession)(body: => T): T =
+    GraftSession.withConfs(s, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   /** Shared by q_session_cap and its two streaming replay twins — one
     * SQL definition, three execution paths under the hash gate.

@@ -927,11 +927,13 @@ object Dedup {
     * probe key), distinct shingle set + size (exact verification), and
     * the 128-hash minhash signature (band candidate generation) — the
     * full per-doc state the incremental probe needs, so probing never
-    * touches the corpus text. Map-only over the input scan.
+    * touches the corpus text. Map-only over the input scan. The kernels
+    * register on `docs`' own session, which `expr` resolves against:
+    * inside a foreachBatch that is the stream's clone, not `spark`.
     */
   private[graft] def indexRowsOn(spark: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.MinHashExpr.register(spark)
-    graft.functions.ShingleExprs.register(spark)
+    graft.functions.MinHashExpr.register(docs.sparkSession)
+    graft.functions.ShingleExprs.register(docs.sparkSession)
     withMinhashSig(
       docs
         .select(col("doc_id"), normTextHashCol.as("text_hash"), shingleArrayCol.as("sh"))

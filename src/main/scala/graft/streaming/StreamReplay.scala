@@ -3,32 +3,32 @@ package graft.streaming
 import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.GraftSession
 import graft.sources.Tables
 
 /** File-source REPLAY harness: drives the streaming operators through
-  * the driver's hash gate by re-feeding the batch `events` corpus as a
-  * sequence of time-ordered micro-batches.
+  * the gate's hash check by re-feeding the stored corpus as a
+  * sequence of ordered micro-batches, so each streaming twin
+  * (windows, sessions, exactly-once dedup, sequencers, store tails and
+  * writers) is checked against the same DuckDB oracle as its batch
+  * sibling:
   *
-  * Until now the streaming twins (tumbling/hopping/session windows,
-  * exactly-once dedup) were spec-only: MemoryStream fixtures proved
-  * streaming == batch on small hand data, but the driver's DuckDB
-  * oracle never saw the streaming PATH. This harness closes that gap:
-  *
-  *   events.parquet → K time-contiguous slice files (controlled names
-  *   AND mtimes, so FileStreamSource admits them oldest-first) →
+  *   corpus table → K contiguous slice files (controlled names AND
+  *   mtimes, so FileStreamSource admits them oldest-first) →
   *   `readStream` + `maxFilesPerTrigger=1` (one slice per micro-batch,
   *   so watermark advancement, state-store merges ACROSS batches, and
   *   Append-mode finalization all genuinely execute) → the streaming
-  *   transform under test → parquet sink + checkpoint, drained with
+  *   transform under test → sink + checkpoint, drained with
   *   `Trigger.AvailableNow` → read back as a batch DataFrame for the
   *   gate compare.
   *
-  * Two far-future SENTINEL slices (`_flush` rows 30/60 days past the
-  * corpus max, negative ids) land in the final micro-batches: the
+  * Event replays append two far-future SENTINEL slices (`_flush` rows
+  * 30/60 days past the corpus max, negative ids), which land in the
+  * final micro-batches: the
   * first pushes the watermark past every real window's end + gap, the
   * second runs one more batch under that watermark so state evicted by
   * it is emitted even under the "watermark updates from the PREVIOUS
@@ -43,7 +43,9 @@ import graft.sources.Tables
   * slices are the files/offsets that arrive over time (Kinesis shards,
   * content-store epochs — see StreamIO), and the same transforms run
   * unchanged. Slicing cost here is one min/max agg + K filtered
-  * single-file writes of the test corpus.
+  * single-file writes of the test corpus. Every drain runs its query
+  * through [[runToEnd]], which states what a drain does to the
+  * caller's session.
   */
 object StreamReplay {
 
@@ -69,6 +71,26 @@ object StreamReplay {
     */
   private val ReplayShuffleWidth = 4
 
+  /** The drain contract: start one streaming query and block until it
+    * ends, with the shuffle width narrowed to [[ReplayShuffleWidth]]
+    * (never widened) plus any `extraConfs` pinned for the query's
+    * lifetime — the query clones the session conf at `start()` — then
+    * record its batch count for [[lastBatchCount]]. Every pinned conf
+    * is restored exactly ([[graft.GraftSession.withConfs]]), so a
+    * replay leaves the caller's session as it found it.
+    */
+  private def runToEnd(spark: SparkSession, extraConfs: (String, String)*)(
+      start: => StreamingQuery
+  ): Unit = {
+    val widthKey = "spark.sql.shuffle.partitions"
+    val width    = math.min(ReplayShuffleWidth, spark.conf.get(widthKey).toInt)
+    GraftSession.withConfs(spark, (widthKey -> width.toString) +: extraConfs: _*) {
+      val query = start
+      query.awaitTermination()
+      recordBatchCount(query)
+    }
+  }
+
   /** Micro-batch count (data-carrying batches only) of the most recent
     * replay ON THIS THREAD (test telemetry). Counted from
     * `recentProgress` with `numInputRows > 0` rather than the last
@@ -81,7 +103,7 @@ object StreamReplay {
     override def initialValue(): Long = -1L
   }
   def lastBatchCount: Long = lastBatchCountTl.get()
-  private def recordBatchCount(query: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  private def recordBatchCount(query: StreamingQuery): Unit = {
     val recent = query.recentProgress
     // recentProgress is a BOUNDED ring (spark.sql.streaming
     // .numRecentProgressUpdates, default 100): a replay running more
@@ -121,13 +143,52 @@ object StreamReplay {
     * drained sinks, removed by a shutdown hook — repeated Verify/Bench
     * runs no longer accumulate orphaned graft-replay-* trees.
     */
-  private lazy val root: Path = {
+  private[graft] lazy val root: Path = {
     val r = Files.createTempDirectory("graft-replay")
     sys.addShutdownHook(deleteTree(r))
     r
   }
 
   private val runCounter = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Run one drain in a fresh run dir: `drain` gets the dir and its
+    * checkpoint path, and the checkpoint (offsets + state snapshots,
+    * the bulk of a replay's footprint) is deleted once `drain` returns,
+    * i.e. once its query committed. The run dir's sinks and stores stay
+    * until the JVM shutdown hook — the read-backs are lazy.
+    */
+  private def inFreshRun[T](drain: (Path, Path) => T): T = {
+    val run    = Files.createDirectories(root.resolve(f"run-${runCounter.getAndIncrement()}%04d"))
+    val ckpt   = run.resolve("ckpt")
+    val result = drain(run, ckpt)
+    deleteTree(ckpt)
+    result
+  }
+
+  /** Drain the streaming DataFrame built by `stream` (given the fresh
+    * run dir, for inputs that live next to the sink) to a parquet sink
+    * under AvailableNow, and read the sink back.
+    */
+  private def drainToParquet(spark: SparkSession, extraConfs: (String, String)*)(
+      stream: Path => DataFrame
+  ): DataFrame =
+    inFreshRun { (run, ckpt) =>
+      val out = run.resolve("out").toString
+      runToEnd(spark, extraConfs: _*)(
+        stream(run).writeStream
+          .format("parquet")
+          .option("path", out)
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(Trigger.AvailableNow())
+          .start())
+      spark.read.parquet(out)
+    }
+
+  /** One file source over a slice dir, admitting one slice file per
+    * micro-batch.
+    */
+  private def sliceStream(spark: SparkSession, ddl: String, inDir: Path): DataFrame =
+    spark.readStream.schema(ddl).option("maxFilesPerTrigger", "1").parquet(inDir.toString)
 
   /** Slice directories are immutable once built, and most replay keys
     * ask for the SAME slicing of the same corpus (default 4 slices +
@@ -222,17 +283,7 @@ object StreamReplay {
     val inDir = cachedSlices(s"documents|$sfDir|$slices") { dir =>
       val docs = Tables(spark, sfDir).documents
         .select("doc_id", "text", "lang", "source", "n_chars")
-      val bounds = docs.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      val minId  = bounds.getLong(0)
-      val span   = math.max(1L, bounds.getLong(1) - minId)
-      for (i <- 0 until slices) {
-        val lo   = minId + span * i / slices
-        val hi   = minId + span * (i + 1) / slices
-        val cond =
-          if (i == slices - 1) col("doc_id") >= lo
-          else col("doc_id") >= lo && col("doc_id") < hi
-        writeSlice(dir, i, docs.filter(cond))
-      }
+      writeRangeSlices(dir, docs, col("doc_id"), slices): Unit
     }
     drain(spark, inDir, documentsDdl, 1)(ss => xform(ss.head))
   }
@@ -252,18 +303,8 @@ object StreamReplay {
       perBatch: DataFrame => DataFrame
   ): DataFrame = {
     val inDir = cachedSlices(s"embeddings|$sfDir|$slices") { dir =>
-      val emb    = Tables(spark, sfDir).embeddings.select("vec_id", "embedding", "label")
-      val bounds = emb.agg(min(col("vec_id")), max(col("vec_id"))).head()
-      val minId  = bounds.getLong(0)
-      val span   = math.max(1L, bounds.getLong(1) - minId)
-      for (i <- 0 until slices) {
-        val lo   = minId + span * i / slices
-        val hi   = minId + span * (i + 1) / slices
-        val cond =
-          if (i == slices - 1) col("vec_id") >= lo
-          else col("vec_id") >= lo && col("vec_id") < hi
-        writeSlice(dir, i, emb.filter(cond))
-      }
+      val emb = Tables(spark, sfDir).embeddings.select("vec_id", "embedding", "label")
+      writeRangeSlices(dir, emb, col("vec_id"), slices): Unit
     }
     drainForeachBatch(spark, inDir, embeddingsDdl)((batch, _) => perBatch(batch))
   }
@@ -309,13 +350,9 @@ object StreamReplay {
     */
   private def drainForeachBatch(spark: SparkSession, inDir: Path, ddl: String)(
       perBatch: (DataFrame, Long) => DataFrame
-  ): DataFrame = {
-    val run  = Files.createDirectories(root.resolve(f"run-${runCounter.getAndIncrement()}%04d"))
-    val ckpt = run.resolve("ckpt")
-    val out  = drainForeachBatchAt(spark, inDir, ddl, run.resolve("out").toString, ckpt)(perBatch)
-    deleteTree(ckpt)
-    out
-  }
+  ): DataFrame =
+    inFreshRun((run, ckpt) =>
+      drainForeachBatchAt(spark, inDir, ddl, run.resolve("out").toString, ckpt)(perBatch))
 
   /** [[drainForeachBatch]] against caller-owned out/checkpoint dirs —
     * the resumable form (re-invoking with the same dirs continues
@@ -328,15 +365,8 @@ object StreamReplay {
       outDir: String,
       ckpt: Path
   )(perBatch: (DataFrame, Long) => DataFrame): DataFrame = {
-    val spKey = "spark.sql.shuffle.partitions"
-    val prev  = spark.conf.get(spKey)
-    spark.conf.set(spKey, math.min(ReplayShuffleWidth, prev.toInt).toString)
-    try {
-      val query = spark.readStream
-        .schema(ddl)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.toString)
-        .writeStream
+    runToEnd(spark)(
+      sliceStream(spark, ddl, inDir).writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
           // per-batch dir (no '=': a partition-style name would add an
           // inferred column to the read-back schema)
@@ -344,10 +374,7 @@ object StreamReplay {
         }
         .option("checkpointLocation", ckpt.toString)
         .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      recordBatchCount(query)
-    } finally spark.conf.set(spKey, prev)
+        .start())
     spark.read.option("recursiveFileLookup", "true").parquet(outDir)
   }
 
@@ -381,20 +408,9 @@ object StreamReplay {
           col("topic_id"),
           unix_timestamp(col("hr")).cast("string").as("message"),
           col("n_devices"),
-          lit(10L).as("page_size"),
-          unix_timestamp(col("hr")).as("hr_s")
+          lit(10L).as("page_size")
         )
-      val bounds = msgs.agg(min(col("hr_s")), max(col("hr_s"))).head()
-      val minS   = bounds.getLong(0)
-      val span   = math.max(1L, bounds.getLong(1) - minS)
-      for (i <- 0 until slices) {
-        val lo   = minS + span * i / slices
-        val hi   = minS + span * (i + 1) / slices
-        val cond =
-          if (i == slices - 1) col("hr_s") >= lo
-          else col("hr_s") >= lo && col("hr_s") < hi
-        writeSlice(dir, i, msgs.filter(cond).drop("hr_s"))
-      }
+      writeRangeSlices(dir, msgs, col("message").cast("long"), slices): Unit
     }
     drain(spark, inDir, topicsDdl, 1, cacheKey)(ss => xform(ss.head))
   }
@@ -433,28 +449,14 @@ object StreamReplay {
       for (i <- 0 until slices)
         writeSlice(dir, i, pay.filter(pmod(col("device_id"), lit(slices)) === i))
     }
-    val run    = Files.createDirectories(root.resolve(f"run-${runCounter.getAndIncrement()}%04d"))
-    val outDir = run.resolve("out").toString
-    val ckpt   = run.resolve("ckpt")
-    val spKey  = "spark.sql.shuffle.partitions"
-    val prev   = spark.conf.get(spKey)
-    spark.conf.set(spKey, math.min(ReplayShuffleWidth, prev.toInt).toString)
-    try {
-      val query = StreamIO.batchedQueueSink(
-        spark.readStream
-          .schema(payloadsDdl)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(inDir.toString),
-        outDir,
-        ckpt.toString,
-        batchSize,
-        availableNow = true
-      )
-      query.awaitTermination()
-      recordBatchCount(query)
-    } finally spark.conf.set(spKey, prev)
-    deleteTree(ckpt)
-    StreamIO.readQueueBatches(spark, outDir)
+    inFreshRun { (run, ckpt) =>
+      val outDir = run.resolve("out").toString
+      runToEnd(spark)(
+        StreamIO.batchedQueueSink(
+          sliceStream(spark, payloadsDdl, inDir), outDir, ckpt.toString, batchSize,
+          availableNow = true))
+      StreamIO.readQueueBatches(spark, outDir)
+    }
   }
 
   /** A18's STREAMING_WRITE leg under the gate: stream the documents
@@ -479,27 +481,17 @@ object StreamReplay {
       for (i <- 0 until slices)
         writeSlice(dir, i, docs.filter(col("slice") === i).drop("slice"))
     }
-    val run   = Files.createDirectories(root.resolve(f"run-${runCounter.getAndIncrement()}%04d"))
-    val store = run.resolve("store").toString
-    val ckpt  = run.resolve("ckpt")
-    val spKey = "spark.sql.shuffle.partitions"
-    val prev  = spark.conf.get(spKey)
-    spark.conf.set(spKey, math.min(ReplayShuffleWidth, prev.toInt).toString)
-    try {
-      val query = spark.readStream
-        .schema("result_key STRING, payload STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(inDir.toString)
-        .writeStream
-        .format("graft.sources.ContentStore")
-        .option("path", store)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      recordBatchCount(query)
-    } finally spark.conf.set(spKey, prev)
-    deleteTree(ckpt)
+    val store = inFreshRun { (run, ckpt) =>
+      val store = run.resolve("store").toString
+      runToEnd(spark)(
+        sliceStream(spark, "result_key STRING, payload STRING", inDir).writeStream
+          .format("graft.sources.ContentStore")
+          .option("path", store)
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(Trigger.AvailableNow())
+          .start())
+      store
+    }
     // one committed manifest per epoch, named epoch-<queryId>-<epochId>;
     // pin the read to each manifest and tag rows with its epoch id
     graft.sources.ContentStore
@@ -539,19 +531,13 @@ object StreamReplay {
     * raw-directory shape because proving THAT path correct is its job.
     */
   def replayBinaryIngest(spark: SparkSession, sfDir: String, batches: Int = 4): DataFrame = {
-    val run  = Files.createDirectories(root.resolve(f"run-${runCounter.getAndIncrement()}%04d"))
-    val out  = run.resolve("out").toString
-    val ckpt = run.resolve("ckpt")
-    val t    = Tables(spark, sfDir)
+    val t = Tables(spark, sfDir)
     // the landing dir is the JVM-shared fixture (pure function of the
     // corpus) — the batch key, this drain, and repeat bench iterations
     // all read one 5000-file write
     val bin     = graft.operators.Multimodal.sharedBinaryFixture(t)
     val nFiles  = t.documents.count()
     val perTrig = math.max(1L, (nFiles + batches - 1) / batches)
-    val spKey = "spark.sql.shuffle.partitions"
-    val prev  = spark.conf.get(spKey)
-    spark.conf.set(spKey, math.min(ReplayShuffleWidth, prev.toInt).toString)
     // Each micro-batch re-resolves its admitted files as an
     // InMemoryFileIndex whose ROOTS are the batch's individual file
     // paths; past parallelPartitionDiscoveryThreshold (default 32)
@@ -562,36 +548,20 @@ object StreamReplay {
     // loop over K paths beats a K-task job until K is far beyond any
     // sane files-per-trigger (and at real scale the archive-granularity
     // drain below is the documented fix for per-file admission).
-    val listKey  = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    val prevList = spark.conf.get(listKey, "32")
-    spark.conf.set(listKey, math.max(prevList.toInt, (perTrig + 1).min(100000L).toInt).toString)
-    try {
-      val scan = spark.readStream
-        .format("binaryFile")
-        .schema(
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "path STRING, modificationTime TIMESTAMP, length LONG, content BINARY"
+    val listKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val listing = math.max(spark.conf.get(listKey, "32").toInt, (perTrig + 1).min(100000L).toInt)
+    drainToParquet(spark, listKey -> listing.toString)(_ =>
+      graft.operators.Multimodal.binaryMetaProjection(
+        spark.readStream
+          .format("binaryFile")
+          .schema(
+            org.apache.spark.sql.types.StructType.fromDDL(
+              "path STRING, modificationTime TIMESTAMP, length LONG, content BINARY"
+            )
           )
-        )
-        .option("pathGlobFilter", "*.bin")
-        .option("maxFilesPerTrigger", perTrig.toString)
-        .load(bin)
-      val query = graft.operators.Multimodal
-        .binaryMetaProjection(scan)
-        .writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      recordBatchCount(query)
-    } finally {
-      spark.conf.set(spKey, prev)
-      spark.conf.set(listKey, prevList)
-    }
-    deleteTree(ckpt)
-    spark.read.parquet(out)
+          .option("pathGlobFilter", "*.bin")
+          .option("maxFilesPerTrigger", perTrig.toString)
+          .load(bin)))
   }
 
   /** C12c's STREAMING leg — the ARCHIVE-granularity media drop: the
@@ -612,33 +582,14 @@ object StreamReplay {
     * 100 MB-1 GB archive) admission amortizes to noise.
     */
   def replayArchiveIngest(spark: SparkSession, sfDir: String): DataFrame = {
-    val run   = Files.createDirectories(root.resolve(f"run-${runCounter.getAndIncrement()}%04d"))
-    val out   = run.resolve("out").toString
-    val ckpt  = run.resolve("ckpt")
     val store = graft.operators.Multimodal.sharedArchiveStore(Tables(spark, sfDir))
-    val spKey = "spark.sql.shuffle.partitions"
-    val prev  = spark.conf.get(spKey)
-    spark.conf.set(spKey, math.min(ReplayShuffleWidth, prev.toInt).toString)
-    try {
-      val query = graft.operators.Multimodal
-        .archiveMetaProjection(
-          spark.readStream
-            .format("graft.sources.ContentStore")
-            .option("path", store)
-            .option("maxFilesPerTrigger", "1")
-            .load()
-        )
-        .writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      recordBatchCount(query)
-    } finally spark.conf.set(spKey, prev)
-    deleteTree(ckpt)
-    spark.read.parquet(out)
+    drainToParquet(spark)(_ =>
+      graft.operators.Multimodal.archiveMetaProjection(
+        spark.readStream
+          .format("graft.sources.ContentStore")
+          .option("path", store)
+          .option("maxFilesPerTrigger", "1")
+          .load()))
   }
 
   /** A18's MICRO_BATCH_READ leg under the gate — the read-side twin of
@@ -651,44 +602,28 @@ object StreamReplay {
     * once commit all under the hash.
     */
   def replayStoreTail(spark: SparkSession, sfDir: String, writes: Int = 4): DataFrame = {
-    val run   = Files.createDirectories(root.resolve(f"run-${runCounter.getAndIncrement()}%04d"))
-    val store = run.resolve("store").toString
-    val out   = run.resolve("out").toString
-    val ckpt  = run.resolve("ckpt")
     val docs = Tables(spark, sfDir).documents.select(
       concat(lit("doc-"), col("doc_id")).as("result_key"),
       col("text").as("payload"),
       pmod(col("doc_id"), lit(writes)).as("slice")
     )
-    for (i <- 0 until writes)
-      docs
-        .filter(col("slice") === i)
-        .drop("slice")
-        .write
-        .format("graft.sources.ContentStore")
-        .option("path", store)
-        .mode("append")
-        .save()
-    val spKey = "spark.sql.shuffle.partitions"
-    val prev  = spark.conf.get(spKey)
-    spark.conf.set(spKey, math.min(ReplayShuffleWidth, prev.toInt).toString)
-    try {
-      val query = spark.readStream
+    drainToParquet(spark) { run =>
+      val store = run.resolve("store").toString
+      for (i <- 0 until writes)
+        docs
+          .filter(col("slice") === i)
+          .drop("slice")
+          .write
+          .format("graft.sources.ContentStore")
+          .option("path", store)
+          .mode("append")
+          .save()
+      spark.readStream
         .format("graft.sources.ContentStore")
         .option("path", store)
         .option("maxFilesPerTrigger", "1")
         .load()
-        .writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      recordBatchCount(query)
-    } finally spark.conf.set(spKey, prev)
-    deleteTree(ckpt)
-    spark.read.parquet(out)
+    }
   }
 
   /** The COLUMNAR store's MICRO_BATCH_READ leg under the gate — the
@@ -710,9 +645,6 @@ object StreamReplay {
       columns: Option[String] = None,
       keyRange: Option[(String, Long, Long)] = None
   ): DataFrame = {
-    val run = Files.createDirectories(root.resolve(f"run-${runCounter.getAndIncrement()}%04d"))
-    val out  = run.resolve("out").toString
-    val ckpt = run.resolve("ckpt")
     // the epoch-store INPUT fixture is immutable once published and
     // identical for every tail variant with the same layout (the plain
     // and pruned tails read the writer's own layout; the ranged tail
@@ -735,10 +667,7 @@ object StreamReplay {
           dir.toString)
       }
     }.toString
-    val spKey = "spark.sql.shuffle.partitions"
-    val prev  = spark.conf.get(spKey)
-    spark.conf.set(spKey, math.min(ReplayShuffleWidth, prev.toInt).toString)
-    try {
+    drainToParquet(spark) { _ =>
       val reader = spark.readStream
         .format("graft.sources.ColumnarStore")
         .option("path", store)
@@ -751,20 +680,10 @@ object StreamReplay {
       // keyRange is an I/O option, not a predicate (stats are
       // file-granular): the consumer composes its OWN filter, which
       // restores exactness over the covering files' out-of-range rows
-      val query = keyRange.fold(loaded) { case (c, lo, hi) =>
+      keyRange.fold(loaded) { case (c, lo, hi) =>
         loaded.where(col(c).between(lit(lo), lit(hi)))
       }
-        .writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      recordBatchCount(query)
-    } finally spark.conf.set(spKey, prev)
-    deleteTree(ckpt)
-    spark.read.parquet(out)
+    }
   }
 
   /** The COLUMNAR store's STREAMING-WRITE leg under the gate — the
@@ -785,25 +704,14 @@ object StreamReplay {
       for (i <- 0 until slices)
         writeSlice(dir, i, docs.filter(col("slice") === i).drop("slice"))
     }
-    val run   = Files.createDirectories(root.resolve(f"run-${runCounter.getAndIncrement()}%04d"))
-    val store = run.resolve("store").toString
-    val ckpt  = run.resolve("ckpt").toString
-    val spKey = "spark.sql.shuffle.partitions"
-    val prev  = spark.conf.get(spKey)
-    spark.conf.set(spKey, math.min(ReplayShuffleWidth, prev.toInt).toString)
-    try {
-      val query = graft.sources.ParquetEpochs.streamingAppend(
-        spark.readStream
-          .schema("doc_id LONG, lang STRING, n_chars LONG, text STRING")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(inDir.toString),
-        store,
-        ckpt,
-        availableNow = true
-      )
-      query.awaitTermination()
-      recordBatchCount(query)
-    } finally spark.conf.set(spKey, prev)
+    val store = inFreshRun { (run, ckpt) =>
+      val store = run.resolve("store").toString
+      runToEnd(spark)(
+        graft.sources.ParquetEpochs.streamingAppend(
+          sliceStream(spark, "doc_id LONG, lang STRING, n_chars LONG, text STRING", inDir),
+          store, ckpt.toString, availableNow = true))
+      store
+    }
     // one committed manifest per epoch, named epoch-pq-<writer>-<id>;
     // pin the read to each manifest and tag rows with its epoch id
     graft.sources.ParquetEpochs
@@ -843,27 +751,15 @@ object StreamReplay {
         writeSlice(dir, i, batch)
       }
     }
-    val run   = Files.createDirectories(root.resolve(f"run-${runCounter.getAndIncrement()}%04d"))
-    val store = run.resolve("store").toString
-    val ckpt  = run.resolve("ckpt").toString
-    val spKey = "spark.sql.shuffle.partitions"
-    val prev  = spark.conf.get(spKey)
-    spark.conf.set(spKey, math.min(ReplayShuffleWidth, prev.toInt).toString)
-    try {
-      val query = graft.sources.ParquetEpochs.streamingUpsert(
-        spark.readStream
-          .schema("doc_id LONG, lang STRING, n_chars LONG")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(inDir.toString),
-        store,
-        "doc_id",
-        ckpt,
-        availableNow = true,
-        clusterBy = Some(("doc_id", ReplayShuffleWidth))
-      )
-      query.awaitTermination()
-      recordBatchCount(query)
-    } finally spark.conf.set(spKey, prev)
+    val store = inFreshRun { (run, ckpt) =>
+      val store = run.resolve("store").toString
+      runToEnd(spark)(
+        graft.sources.ParquetEpochs.streamingUpsert(
+          sliceStream(spark, "doc_id LONG, lang STRING, n_chars LONG", inDir),
+          store, "doc_id", ckpt.toString, availableNow = true,
+          clusterBy = Some(("doc_id", ReplayShuffleWidth))))
+      store
+    }
     graft.sources.ParquetEpochs
       .read(spark, store, graft.sources.ParquetEpochs.snapshot(store))
       .orderBy("doc_id")
@@ -900,12 +796,11 @@ object StreamReplay {
       tau: Double,
       slices: Int = 4
   ): DataFrame = {
-    val inDir      = documentsModSlices(spark, sfDir, slices)
-    val run        = Files.createDirectories(root.resolve(f"run-${runCounter.getAndIncrement()}%04d"))
-    val sigStore   = run.resolve("sig").toString
-    val stateStore = run.resolve("state").toString
-    val drained = drainForeachBatch(spark, inDir, documentsDdl)(
-      componentMaintenanceBatch(spark, sigStore, stateStore, tau))
+    val inDir = documentsModSlices(spark, sfDir, slices)
+    val drained = inFreshRun((run, ckpt) =>
+      drainForeachBatchAt(spark, inDir, documentsDdl, run.resolve("out").toString, ckpt)(
+        componentMaintenanceBatch(
+          spark, run.resolve("sig").toString, run.resolve("state").toString, tau)))
     drained.groupBy("doc_id").agg(min(col("component")).as("component"))
   }
 
@@ -966,22 +861,7 @@ object StreamReplay {
     val inDir = cachedSlices(s"events|$sfDir|$slices|${sentinelTypes.mkString(",")}") { dir =>
       val ev = Tables(spark, sfDir).events
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
-      val bounds = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
-      val minUs  = bounds.getLong(0)
-      val maxUs  = bounds.getLong(1)
-      val spanUs = math.max(1L, maxUs - minUs)
-
-      // time-contiguous slices: slice i covers [minUs + i*span/K, next)
-      // — contiguity (not equal row counts) is what matters, so the
-      // boundaries come from one min/max agg, never a global sort
-      for (i <- 0 until slices) {
-        val lo   = minUs + spanUs * i / slices
-        val hi   = minUs + spanUs * (i + 1) / slices
-        val cond =
-          if (i == slices - 1) unix_micros(col("ts")) >= lo
-          else unix_micros(col("ts")) >= lo && unix_micros(col("ts")) < hi
-        writeSlice(dir, i, ev.filter(cond))
-      }
+      val maxUs = writeRangeSlices(dir, ev, unix_micros(col("ts")), slices)
       // sentinel slices: see scaladoc — two, so the second batch runs
       // under the watermark the first advanced; one row per sentinel
       // type so per-side type filters still see a watermark carrier
@@ -1008,8 +888,9 @@ object StreamReplay {
     drain(spark, inDir, eventsDdl, nSources, cacheKey)(xform)
   }
 
-  /** Start `nSources` independent file sources over the slice dir, run
-    * the transform, drain to parquet under AvailableNow, read back.
+  /** Start `nSources` independent file sources over the slice dir,
+    * run the transform, drain to parquet, read back — once per JVM
+    * when a `cacheKey` names the pipeline (see [[drainCache]]).
     */
   private def drain(
       spark: SparkSession,
@@ -1017,54 +898,28 @@ object StreamReplay {
       schemaDdl: String,
       nSources: Int,
       cacheKey: Option[String] = None
-  )(xform: Seq[DataFrame] => DataFrame): DataFrame = cacheKey match {
-    case Some(key) =>
-      drainCache.computeIfAbsent(key, _ => drainOnce(spark, inDir, schemaDdl, nSources)(xform))
-    case None => drainOnce(spark, inDir, schemaDdl, nSources)(xform)
+  )(xform: Seq[DataFrame] => DataFrame): DataFrame = {
+    def once(): DataFrame =
+      drainToParquet(spark)(_ => xform(Seq.fill(nSources)(sliceStream(spark, schemaDdl, inDir))))
+    cacheKey.fold(once())(key => drainCache.computeIfAbsent(key, _ => once()))
   }
 
-  private def drainOnce(
-      spark: SparkSession,
-      inDir: Path,
-      schemaDdl: String,
-      nSources: Int
-  )(xform: Seq[DataFrame] => DataFrame): DataFrame = {
-    def source(): DataFrame = spark.readStream
-      .schema(schemaDdl)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir.toString)
-
-    val run    = Files.createDirectories(root.resolve(f"run-${runCounter.getAndIncrement()}%04d"))
-    val outDir = run.resolve("out").toString
-    val ckpt   = run.resolve("ckpt")
-    // Stateful operators allocate one state-store instance per shuffle
-    // partition PER micro-batch commit — at gate scale (≤100k rows,
-    // 6-8 batches) 32 partitions is pure commit overhead, so the
-    // replay pins a smaller width for its own streaming query. The
-    // conf is restored before the read-back; in production the state
-    // partition count is sized to stream throughput at the first
-    // deploy (it is fixed by the checkpoint thereafter).
-    val spKey = "spark.sql.shuffle.partitions"
-    val prev  = spark.conf.get(spKey)
-    spark.conf.set(spKey, math.min(ReplayShuffleWidth, prev.toInt).toString)
-    try {
-      val query = xform(Seq.fill(nSources)(source())).writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      // test-only telemetry: specs assert the replay genuinely executed
-      // one micro-batch per slice (plus sentinels), not a single drain
-      recordBatchCount(query)
-    } finally spark.conf.set(spKey, prev)
-    // the drained query committed; its checkpoint (offsets + state
-    // snapshots, the bulk of a replay's footprint) is dead weight now.
-    // `out` stays until the JVM shutdown hook — the read-back is lazy.
-    deleteTree(ckpt)
-
-    spark.read.parquet(outDir)
+  /** Write `df` as `slices` key-contiguous slice files: slice i holds
+    * `key` in [min + i·span/K, min + (i+1)·span/K), the last slice is
+    * open above. Contiguity (not equal row counts) is what matters, so
+    * the bounds come from one min/max agg, never a global sort.
+    * Returns the key's maximum.
+    */
+  private def writeRangeSlices(dir: Path, df: DataFrame, key: Column, slices: Int): Long = {
+    val bounds = df.agg(min(key), max(key)).head()
+    val lo0    = bounds.getLong(0)
+    val span   = math.max(1L, bounds.getLong(1) - lo0)
+    for (i <- 0 until slices) {
+      val lo = lo0 + span * i / slices
+      val hi = lo0 + span * (i + 1) / slices
+      writeSlice(dir, i, df.filter(if (i == slices - 1) key >= lo else key >= lo && key < hi))
+    }
+    bounds.getLong(1)
   }
 
   /** Write one slice as a single parquet file with a deterministic

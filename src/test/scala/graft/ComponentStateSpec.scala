@@ -317,6 +317,21 @@ class ComponentStateSpec extends SparkSpecBase {
     assert(streamed == batch)
   }
 
+  test("C22k: streamed maintenance runs on a fresh session that never registered the kernels") {
+    // each foreachBatch batch belongs to the stream's clone of the
+    // session, so the shingle/minhash kernels must be registered there
+    val streamed = labels(
+      graft.streaming.StreamReplay
+        .replayComponentMaintenance(spark.newSession(), sfDir, Dedup.JaccardTau))
+    val batch = labels(
+      Dedup.nearDupComponents(
+        tables,
+        Dedup.JaccardTau,
+        None,
+        Some(Dedup.hashedPostingsOn(tables.documents))))
+    assert(streamed == batch)
+  }
+
   test("C22j: band label lookup plans only covering files, values equal the full-state filter") {
     import org.apache.spark.sql.functions._
     val root  = java.nio.file.Files.createTempDirectory("graft-compstate-lkp")
