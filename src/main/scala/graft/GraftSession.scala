@@ -24,6 +24,8 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
+      // the gate sessions' codegen cache and class-loader defaults
+      .config(GraftExtensions.SessionDefaults)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // kernels are also individually self-registered by their operators

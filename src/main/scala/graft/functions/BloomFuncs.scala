@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
+import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** SQL surface for Spark's own bloom-filter sketch expressions.
@@ -17,22 +17,14 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   * `DataFrameStatFunctions.bloomFilter` collect.
   */
 object BloomFuncs {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg",
-      (exprs: Seq[Expression]) =>
-        exprs match {
-          case Seq(c)       => new BloomFilterAggregate(c)
-          case Seq(c, n)    => new BloomFilterAggregate(c, n)
-          case Seq(c, n, b) => new BloomFilterAggregate(c, n, b)
-          case _ => throw new IllegalArgumentException("bloom_agg(col[, estItems[, numBits]])")
-        },
-      "built-in"
+  def register(spark: SparkSession): Unit =
+    registerMissing(spark)(
+      ("bloom_agg", {
+        case Seq(c)       => new BloomFilterAggregate(c)
+        case Seq(c, n)    => new BloomFilterAggregate(c, n)
+        case Seq(c, n, b) => new BloomFilterAggregate(c, n, b)
+        case _ => throw new IllegalArgumentException("bloom_agg(col[, estItems[, numBits]])")
+      }),
+      ("bloom_might_contain", exprs => BloomFilterMightContain(exprs.head, exprs(1)))
     )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      (exprs: Seq[Expression]) => BloomFilterMightContain(exprs.head, exprs(1)),
-      "built-in"
-    )
-  }
 }

@@ -151,6 +151,5 @@ object FreqItemsAgg {
   val Capacity = 48
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("mg_candidates", exprs => MisraGriesCandidates(exprs.head), "built-in")
+    registerMissing(spark)(("mg_candidates", exprs => MisraGriesCandidates(exprs.head)))
 }

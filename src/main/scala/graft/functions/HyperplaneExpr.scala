@@ -116,6 +116,5 @@ object HyperplaneExpr {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("lsh_buckets", exprs => LshBuckets(exprs.head), "built-in")
+    registerMissing(spark)(("lsh_buckets", exprs => LshBuckets(exprs.head)))
 }

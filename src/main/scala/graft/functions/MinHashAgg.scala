@@ -82,6 +82,5 @@ case class MinHashUnion(
 
 object MinHashAgg {
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("minhash_union", exprs => MinHashUnion(exprs.head), "built-in")
+    registerMissing(spark)(("minhash_union", exprs => MinHashUnion(exprs.head)))
 }

@@ -84,6 +84,5 @@ object MinHashExpr {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("minhash_sig", exprs => MinHashSig(exprs.head), "built-in")
+    registerMissing(spark)(("minhash_sig", exprs => MinHashSig(exprs.head)))
 }

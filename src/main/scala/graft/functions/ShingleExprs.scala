@@ -266,16 +266,12 @@ object ShingleExprs {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("shingles", exprs => Shingles(exprs.head), "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("minhash_sig_str", exprs => MinHashSigStr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("kgram_hashes", exprs => KgramHashes(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("bigram_stats", exprs => BigramStats(exprs.head), "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("band_keys", exprs => BandKeys(exprs.head), "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    registerMissing(spark)(
+      ("shingles",        exprs => Shingles(exprs.head)),
+      ("minhash_sig_str", exprs => MinHashSigStr(exprs.head)),
+      ("kgram_hashes",    exprs => KgramHashes(exprs(0), exprs(1))),
+      ("bigram_stats",    exprs => BigramStats(exprs.head)),
+      ("band_keys",       exprs => BandKeys(exprs.head))
+    )
 }

@@ -72,6 +72,5 @@ object SimHashExpr {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("simhash64", exprs => SimHash64(exprs.head), "built-in")
+    registerMissing(spark)(("simhash64", exprs => SimHash64(exprs.head)))
 }

@@ -253,13 +253,12 @@ object VecExprs {
     * `vec_norm(a)`, `mat_dots(v, m)`, `mat_dots_off(v, m, o)` become
     * available to `expr(...)`/SQL.
     */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vec_dot", exprs => VecDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_norm", exprs => VecNorm(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("mat_dots", exprs => MatDots(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "pq_codes", exprs => PqCodes(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("pq_adc", exprs => PqAdc(exprs(0), exprs(1)), "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    registerMissing(spark)(
+      ("vec_dot",  exprs => VecDot(exprs(0), exprs(1))),
+      ("vec_norm", exprs => VecNorm(exprs.head)),
+      ("mat_dots", exprs => MatDots(exprs(0), exprs(1))),
+      ("pq_codes", exprs => PqCodes(exprs(0), exprs(1), exprs(2))),
+      ("pq_adc",   exprs => PqAdc(exprs(0), exprs(1)))
+    )
 }

@@ -84,6 +84,5 @@ object WinnowExpr {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("winnow_fp", exprs => WinnowFingerprint(exprs.head), "built-in")
+    registerMissing(spark)(("winnow_fp", exprs => WinnowFingerprint(exprs.head)))
 }

@@ -28,4 +28,14 @@ object Bridge {
     */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
+  /** Default `confs` on the active SparkContext's own conf, keeping any
+    * value already set there. Sessions built on the context afterwards
+    * copy that conf, so this reaches static confs a session cannot set.
+    * A no-op when no context is active.
+    */
+  def contextConfIfMissing(confs: Iterable[(String, String)]): Unit =
+    org.apache.spark.SparkContext.getActive.foreach { sc =>
+      confs.foreach { case (k, v) => sc.conf.setIfMissing(k, v) }
+    }
 }

@@ -112,6 +112,21 @@ class SqlSurfaceSpec extends SparkSpecBase {
   }
 
 
+  test("registering a kernel twice leaves the function registry unchanged") {
+    // a fresh session holds only Spark's built-ins: no GraftExtensions,
+    // no GraftSession registrations
+    val s   = spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    val id  = org.apache.spark.sql.catalyst.FunctionIdentifier("shingles")
+    assert(!reg.functionExists(id))
+    graft.functions.ShingleExprs.register(s)
+    val (names, info) = (reg.listFunction().toSet, reg.lookupFunction(id).get)
+    graft.functions.ShingleExprs.register(s)
+    assert(reg.listFunction().toSet == names)
+    assert(reg.lookupFunction(id).get eq info, "the second register replaced shingles")
+    assert(s.sql("SELECT size(shingles(split('a b c d e', ' '))) AS n").head().getInt(0) == 3)
+  }
+
   test("catalog: K-V and columnar stores resolve BY NAME; values equal the path-option reads") {
     val wh = java.nio.file.Files.createTempDirectory("graft-catspec").toString
     spark.conf.set("spark.sql.catalog.gspec", "graft.sources.GraftCatalog")

@@ -11,6 +11,13 @@ end-to-end metric that BENCHMARK.json declares, the script prints each
 side's median and quartiles and how many pairs the change won, and
 calls a gain only when the change won at least nine tenths of the pairs
 and the medians differ by more than the parent's quartile distance.
+
+It also applies the no-regression rule to each metric that has a
+`bound` (a fraction of the parent's median): the gate column reads
+`worse` when the change's median is worse than the parent's by more than
+the bound, `unresolved` when the parent's quartile spread is wider than
+the bound (the runs spread too widely to tell), and `ok` otherwise. The
+script exits nonzero when a metric is `worse` or a run failed.
 """
 
 import argparse
@@ -76,8 +83,20 @@ def summarize(metrics, pairs):
                      "change_q1": cq[0], "change_median": cq[1], "change_q3": cq[2],
                      "change_wins": wins, "change_losses": losses,
                      "median_change_frac": (cq[1] - pq[1]) / pq[1] if pq[1] else None,
-                     "gain": gain})
+                     "gain": gain, "gate": gate(m.get("bound"), pq, -gap)})
     return rows
+
+
+def gate(bound, pq, worsening):
+    """The no-regression verdict for one metric: `worsening` is how much
+    worse the change's median is than the parent's, in the metric's unit."""
+    if bound is None or not pq[1]:
+        return "ok"
+    if worsening > bound * abs(pq[1]):
+        return "worse"
+    if pq[2] - pq[0] > bound * abs(pq[1]):
+        return "unresolved"
+    return "ok"
 
 
 def main():
@@ -130,13 +149,13 @@ def main():
     print(f"\n{a.workload}: {len(pairs)} complete pairs of {a.pairs}, seeds {base}..{base + a.pairs - 1}, "
           f"--seconds {seconds:g}, parent {a.parent} vs working tree")
     print(f"{'metric':<12} {'parent median [q1, q3]':>30} {'change median [q1, q3]':>30} "
-          f"{'change':>8} {'wins':>7}  gain")
+          f"{'change':>8} {'wins':>7}  gain  gate")
     for r in rows:
         fmt = lambda s: f"{r[s + '_median']:.3f} [{r[s + '_q1']:.3f}, {r[s + '_q3']:.3f}]"
         frac = r["median_change_frac"]
         print(f"{r['metric']:<12} {fmt('parent'):>30} {fmt('change'):>30} "
               f"{(f'{frac:+.1%}' if frac is not None else '-'):>8} "
-              f"{r['change_wins']:>3}/{r['n']:<3}  {'yes' if r['gain'] else 'no'}")
+              f"{r['change_wins']:>3}/{r['n']:<3}  {'yes' if r['gain'] else 'no ':<4}  {r['gate']}")
     bad = [r for r in runs if not r["correct"]]
     if bad:
         print(f"{len(bad)} run(s) failed or had wrong output: "
@@ -145,7 +164,10 @@ def main():
         Path(a.out).write_text(json.dumps({"workload": a.workload, "parent": a.parent,
                                            "seconds": seconds, "runs": runs, "summary": rows},
                                           indent=1))
-    sys.exit(1 if bad else 0)
+    worse = [r["metric"] for r in rows if r["gate"] == "worse"]
+    if worse:
+        print("worse beyond the bound: " + ", ".join(worse))
+    sys.exit(1 if bad or worse else 0)
 
 
 if __name__ == "__main__":
