@@ -1,26 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the SQL status listener tracks every execution even with the UI
-      // off; ~2000 materializations deep (iterative operators run many
-      // per query) its store makes driver-latency-bound loops measurably
-      // slower — keep only a token tail so late queries aren't taxed for
-      // the suite that ran before them
-      .config("spark.sql.ui.retainedExecutions", "16")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      // same extensions as Verify: benchmark what the gate verifies
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus)
     // warm-up: JIT, codegen compiler, parquet footer caches — so the
     // first measured query isn't charged session startup
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measurement harness for COLUMNAR-store file skipping (VERDICT-r16
@@ -49,18 +49,11 @@ object ColumnarSkipBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val iters  = sys.env.getOrElse("SPARK_GRAFT_SKIP_ITERS", "5").toInt
     val files  = sys.env.getOrElse("SPARK_GRAFT_SKIP_FILES", "256").toInt
     val perFile = sys.env.getOrElse("SPARK_GRAFT_SKIP_ROWS", "4000").toInt
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val root = java.nio.file.Files.createTempDirectory("graft-skipbench")

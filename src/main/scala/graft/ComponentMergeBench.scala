@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale canary for the C22i/C22k maintenance claim: a FIXED delta's
@@ -33,23 +33,13 @@ import org.apache.spark.sql.functions._
 object ComponentMergeBench {
 
   def main(args: Array[String]): Unit = {
-    val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val sfDir  = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_CANARY_COPIES", "10").toInt
     val iters  = sys.env.getOrElse("SPARK_GRAFT_CANARY_ITERS", "2").toInt
     require(copies <= ScaleCanaryBench.Perms.size,
       s"at most ${ScaleCanaryBench.Perms.size} content-varied copies")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "16")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val tau    = graft.operators.Dedup.JaccardTau

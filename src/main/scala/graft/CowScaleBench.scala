@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement harness for B89's SCALE claim (the UpsertScaleBench
@@ -31,18 +30,12 @@ object CowScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val iters   = sys.env.getOrElse("SPARK_GRAFT_COW_ITERS", "3").toInt
     val perFile = sys.env.getOrElse("SPARK_GRAFT_COW_ROWS", "4000").toInt
     val counts = sys.env.getOrElse("SPARK_GRAFT_COW_FILES", "64,256,1024")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val root  = java.nio.file.Files.createTempDirectory("graft-cowbench")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement harness for the B81 record-level delete's SCALE claim:
@@ -36,19 +35,12 @@ object DeleteScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val iters   = sys.env.getOrElse("SPARK_GRAFT_DELETE_ITERS", "3").toInt
     val perFile = sys.env.getOrElse("SPARK_GRAFT_DELETE_ROWS", "4000").toInt
     val counts = sys.env.getOrElse("SPARK_GRAFT_DELETE_FILES", "64,256")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val root  = java.nio.file.Files.createTempDirectory("graft-delbench")

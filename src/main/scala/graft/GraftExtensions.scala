@@ -1,21 +1,20 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.graft.Bridge
-import graft.functions.{HyperplaneExpr, MinHashExpr, MinHashUnion, MisraGriesCandidates, ShingleExprs, SimHashExpr, VecExprs, WinnowExpr}
 
 /** SparkSessionExtensions entry point: makes the engine's native
-  * kernels first-class SQL functions in any session built with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` —
-  * no per-operator registration call needed.
+  * kernels (every entry of `graft.functions.kernels`) first-class SQL
+  * functions in any session built with
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")`, and
+  * injects the TopKPerKey rewrite and the RELY-key distinct rule.
   *
-  * (The operators also self-register defensively via the per-session
-  * `register` helpers, so they work on vanilla sessions too.)
+  * (The operators' per-session `register` helpers skip a name the
+  * session already resolves, so on such a session they do nothing; on
+  * a vanilla session they register the kernels.)
   *
-  * It also defaults [[GraftExtensions.SessionDefaults]] so that Spark
-  * compiles each generated class once per JVM:
+  * It also defaults [[GraftExtensions.SessionDefaults]]. Two of them
+  * make Spark compile each generated class once per JVM:
   *  - `spark.sql.codegen.cache.maxEntries` sizes the JVM-wide LRU of
   *    compiled generated classes (Spark's default is 100). The topic
   *    chain cycles through more classes than that per pass, and an LRU
@@ -27,13 +26,13 @@ import graft.functions.{HyperplaneExpr, MinHashExpr, MinHashUnion, MisraGriesCan
   *    graft adds no session artifacts, so isolation protects nothing.
   *
   * Neither can be changed on a live session: the cache size is a static
-  * conf, and isolation is fixed when a session is created. So both go
-  * on the SparkContext's own conf, which every session copies when it
-  * is built; Spark applies extensions after the context exists and
-  * before the first session copies that conf. Limits: an explicit
-  * setting (builder, `--conf`, `-Dspark.*`) wins, and the first code
-  * generation in a JVM fixes the cache size for the rest of its life,
-  * whatever later sessions set.
+  * conf, and isolation is fixed when a session is created. So the
+  * defaults go on the SparkContext's own conf, which every session
+  * copies when it is built; Spark applies extensions after the context
+  * exists and before the first session copies that conf. Limits: an
+  * explicit setting (builder, `--conf`, `-Dspark.*`) wins, and the first
+  * code generation in a JVM fixes the cache size for the rest of its
+  * life, whatever later sessions set.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -45,102 +44,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // B97: SELECT DISTINCT over a RELY-keyed table deletes its
     // aggregate (and the exchange the planner would wrap around it)
     ext.injectOptimizerRule(_ => graft.plans.KeyDistinct.EliminateDistinctOnKey)
-    ext.injectFunction(
-      (
-        FunctionIdentifier("vec_dot"),
-        new ExpressionInfo(VecExprs.VecDot.getClass.getCanonicalName, "vec_dot"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          VecExprs.VecDot(exprs(0), exprs(1))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("vec_norm"),
-        new ExpressionInfo(VecExprs.VecNorm.getClass.getCanonicalName, "vec_norm"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          VecExprs.VecNorm(exprs.head)
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("minhash_sig"),
-        new ExpressionInfo(MinHashExpr.MinHashSig.getClass.getCanonicalName, "minhash_sig"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          MinHashExpr.MinHashSig(exprs.head)
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("shingles"),
-        new ExpressionInfo(ShingleExprs.Shingles.getClass.getCanonicalName, "shingles"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          ShingleExprs.Shingles(exprs.head)
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("minhash_sig_str"),
-        new ExpressionInfo(ShingleExprs.MinHashSigStr.getClass.getCanonicalName, "minhash_sig_str"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          ShingleExprs.MinHashSigStr(exprs.head)
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("kgram_hashes"),
-        new ExpressionInfo(ShingleExprs.KgramHashes.getClass.getCanonicalName, "kgram_hashes"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          ShingleExprs.KgramHashes(exprs(0), exprs(1))
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("bigram_stats"),
-        new ExpressionInfo(ShingleExprs.BigramStats.getClass.getCanonicalName, "bigram_stats"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          ShingleExprs.BigramStats(exprs.head)
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("simhash64"),
-        new ExpressionInfo(SimHashExpr.SimHash64.getClass.getCanonicalName, "simhash64"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          SimHashExpr.SimHash64(exprs.head)
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("winnow_fp"),
-        new ExpressionInfo(WinnowExpr.WinnowFingerprint.getClass.getCanonicalName, "winnow_fp"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          WinnowExpr.WinnowFingerprint(exprs.head)
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("lsh_buckets"),
-        new ExpressionInfo(HyperplaneExpr.LshBuckets.getClass.getCanonicalName, "lsh_buckets"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          HyperplaneExpr.LshBuckets(exprs.head)
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("minhash_union"),
-        new ExpressionInfo(classOf[MinHashUnion].getCanonicalName, "minhash_union"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          MinHashUnion(exprs.head)
-      )
-    )
-    ext.injectFunction(
-      (
-        FunctionIdentifier("mg_candidates"),
-        new ExpressionInfo(classOf[MisraGriesCandidates].getCanonicalName, "mg_candidates"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          MisraGriesCandidates(exprs.head)
-      )
-    )
+    graft.functions.kernels.foreach(k => ext.injectFunction((k.id, k.info, k.builder)))
   }
 }
 
@@ -153,9 +57,18 @@ object GraftExtensions {
     * JVM. Keeping them all cost 242 MB of metaspace at exit against
     * 222 MB with Spark's defaults. One topic pass cycles through about
     * 150 classes; below ~160 entries it thrashes again.
+    *
+    * `spark.sql.legacy.parquet.nanosAsLong` lets `Tables.events` read an
+    * events corpus written as TIMESTAMP(NANOS), which Spark 4's parquet
+    * reader otherwise rejects: the column arrives as a long, and
+    * `Tables.events` rebuilds a microsecond timestamp from it. It only
+    * affects nanosecond columns; the local corpora are all
+    * `timestamp[us]`. Set here once, so reading `events` changes no
+    * session conf.
     */
   val SessionDefaults: Map[String, String] = Map(
-    "spark.sql.codegen.cache.maxEntries"   -> "4096",
-    "spark.sql.artifact.isolation.enabled" -> "false"
+    "spark.sql.codegen.cache.maxEntries"    -> "4096",
+    "spark.sql.artifact.isolation.enabled"  -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong"  -> "true"
   )
 }

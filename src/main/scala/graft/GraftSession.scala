@@ -2,40 +2,48 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's standard config.
+/** The one place a graft session is built: the specs, Bench, Verify,
+  * the scale mains and the scratch harnesses all take it from here, so
+  * what the specs check is the session the gate runs. perfbench's
+  * `Main` keeps its own builder (it is a benchmark file) and mirrors
+  * these settings.
   *
-  * Tuned for local[N] testing but every knob is the one you'd set on a
-  * real cluster: AQE handles runtime re-planning (partition coalescing,
-  * skew-join splitting), shuffle partitions sized to cores at test SF
-  * (on a 1000-executor cluster this becomes ~2x total cores via
-  * spark-submit conf, not code).
+  *  - `local[cores]` with `cores` shuffle partitions: the local corpora
+  *    are small, and AQE (on by default in Spark 4, with partition
+  *    coalescing and skew-join splitting) re-plans from there.
+  *  - Session time zone UTC: `Tables.events` casts the corpus's
+  *    `TIMESTAMP_NTZ` column to `TIMESTAMP`, which is value-identity
+  *    only in UTC, so every operator sees one type and one value.
+  *  - UI off, and the status store capped at 16 SQL executions, 100
+  *    jobs, 100 stages and 1,000 tasks: the SQL status listener tracks
+  *    every execution even with the UI off, and ~2,000 materializations
+  *    deep (iterative operators run many per query) its store makes
+  *    driver-latency-bound loops measurably slower. A token tail keeps
+  *    late queries from paying for the ones that ran before them.
+  *  - `spark.sql.extensions=graft.GraftExtensions`: the kernel SQL
+  *    functions, the TopKPerKey rewrite, the RELY-key distinct rule and
+  *    [[GraftExtensions.SessionDefaults]]. `spark.sql.extensions` is a
+  *    static conf: the first session of a JVM fixes it.
   */
 object GraftSession {
 
-  def local(cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt): SparkSession = {
-    val spark = SparkSession
+  def builder(cores: Int): SparkSession.Builder =
+    SparkSession
       .builder()
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // the gate sessions' codegen cache and class-loader defaults
-      .config(GraftExtensions.SessionDefaults)
-      .getOrCreate()
+      .config("spark.sql.ui.retainedExecutions", "16")
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "100")
+      .config("spark.ui.retainedTasks", "1000")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+
+  def local(cores: Int): SparkSession = {
+    val spark = builder(cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // kernels are also individually self-registered by their operators
-    // and injectable via GraftExtensions; this just makes every
-    // GraftSession SQL-complete out of the box
-    graft.functions.VecExprs.register(spark)
-    graft.functions.MinHashExpr.register(spark)
-    graft.functions.SimHashExpr.register(spark)
-    graft.functions.HyperplaneExpr.register(spark)
-    graft.plans.KeyDistinct.install(spark)
     spark
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measurement harness for the C22e signature-index payload format —
@@ -46,16 +46,9 @@ object IndexPayloadBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val iters = sys.env.getOrElse("SPARK_GRAFT_PAYLOAD_ITERS", "5").toInt
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val t     = graft.sources.Tables(spark, sfDir)

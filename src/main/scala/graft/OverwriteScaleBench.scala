@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale canary for B92 INSERT OVERWRITE (the canary discipline —
@@ -33,15 +32,9 @@ object OverwriteScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val iters = sys.env.getOrElse("SPARK_GRAFT_OVR_ITERS", "3").toInt
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val root  = java.nio.file.Files.createTempDirectory("graft-ovrbench")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement harness for the B84 z-order layout's SCALE claim at the
@@ -23,17 +22,11 @@ object ReadBoxBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val iters   = sys.env.getOrElse("SPARK_GRAFT_BOX_ITERS", "5").toInt
     val files   = sys.env.getOrElse("SPARK_GRAFT_BOX_FILES", "1024").toInt
     val perFile = sys.env.getOrElse("SPARK_GRAFT_BOX_ROWS", "4000").toInt
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val root  = java.nio.file.Files.createTempDirectory("graft-boxbench")

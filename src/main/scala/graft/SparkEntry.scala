@@ -45,7 +45,10 @@ object SparkEntry {
       Joins.storeSkippingColumnarRead(Tables(s, d),
         s"${System.getProperty("java.io.tmpdir")}/graft-skipstore-pq")),
     "q_spj_store" -> ((s, d) =>
-      Joins.spjStoreJoin(Tables(spjSession(s), d),
+      Joins.spjStoreJoin(
+        Tables(scopedSession(s,
+          "spark.sql.sources.v2.bucketing.enabled"        -> "true",
+          "spark.sql.requireAllClusterKeysForCoPartition" -> "false"), d),
         s"${System.getProperty("java.io.tmpdir")}/graft-spjstore")),
     "q_store_runtime_prune" -> ((s, d) =>
       Joins.storeRuntimePrunedJoin(Tables(s, d),
@@ -86,44 +89,31 @@ object SparkEntry {
     "q_stream_upsert" -> ((s, d) =>
       graft.streaming.StreamReplay.replayStreamingUpsert(s, d)),
     "q_catalog_read" -> ((s, d) =>
-      Joins.catalogKvRead(Tables(s, d),
-        s"${System.getProperty("java.io.tmpdir")}/graft-catwh")),
+      Joins.catalogKvRead(Tables(catalogSession(s), d), catalogWarehouse)),
     "q_catalog_read_columnar" -> ((s, d) =>
-      Joins.catalogColumnarRead(Tables(s, d),
-        s"${System.getProperty("java.io.tmpdir")}/graft-catwh")),
+      Joins.catalogColumnarRead(Tables(catalogSession(s), d), catalogWarehouse)),
     "q_catalog_delete" -> ((s, d) =>
-      Joins.catalogSqlDelete(Tables(s, d),
-        s"${System.getProperty("java.io.tmpdir")}/graft-catwh")),
+      Joins.catalogSqlDelete(Tables(catalogSession(s), d), catalogWarehouse)),
     "q_catalog_update" -> ((s, d) =>
-      Joins.catalogSqlUpdate(Tables(s, d),
-        s"${System.getProperty("java.io.tmpdir")}/graft-catwh")),
+      Joins.catalogSqlUpdate(Tables(catalogSession(s), d), catalogWarehouse)),
     "q_catalog_merge" -> ((s, d) =>
-      Joins.catalogSqlMerge(Tables(s, d),
-        s"${System.getProperty("java.io.tmpdir")}/graft-catwh")),
+      Joins.catalogSqlMerge(Tables(catalogSession(s), d), catalogWarehouse)),
     "q_catalog_kv_update" -> ((s, d) =>
-      Joins.catalogKvUpdate(Tables(s, d),
-        s"${System.getProperty("java.io.tmpdir")}/graft-catwh")),
+      Joins.catalogKvUpdate(Tables(catalogSession(s), d), catalogWarehouse)),
     "q_catalog_create" -> ((s, d) =>
-      Joins.catalogCreateRoundtrip(Tables(s, d),
-        s"${System.getProperty("java.io.tmpdir")}/graft-catwh")),
+      Joins.catalogCreateRoundtrip(Tables(catalogSession(s), d), catalogWarehouse)),
     "q_catalog_overwrite" -> ((s, d) =>
-      Joins.catalogOverwrite(Tables(s, d),
-        s"${System.getProperty("java.io.tmpdir")}/graft-catwh")),
+      Joins.catalogOverwrite(Tables(catalogSession(s), d), catalogWarehouse)),
     "q_store_zorder_sql" -> ((s, d) =>
-      Joins.catalogZorderSql(Tables(s, d),
-        s"${System.getProperty("java.io.tmpdir")}/graft-catwh")),
+      Joins.catalogZorderSql(Tables(catalogSession(s), d), catalogWarehouse)),
     "q_catalog_drop" -> ((s, d) =>
-      Joins.catalogDropRoundtrip(Tables(s, d),
-        s"${System.getProperty("java.io.tmpdir")}/graft-catwh")),
+      Joins.catalogDropRoundtrip(Tables(catalogSession(s), d), catalogWarehouse)),
     "q_catalog_rename" -> ((s, d) =>
-      Joins.catalogRename(Tables(s, d),
-        s"${System.getProperty("java.io.tmpdir")}/graft-catwh")),
+      Joins.catalogRename(Tables(catalogSession(s), d), catalogWarehouse)),
     "q_store_rollback" -> ((s, d) =>
-      Joins.catalogRollback(Tables(s, d),
-        s"${System.getProperty("java.io.tmpdir")}/graft-catwh")),
+      Joins.catalogRollback(Tables(catalogSession(s), d), catalogWarehouse)),
     "q_keyed_distinct" -> ((s, d) =>
-      Joins.keyedDistinctJoin(Tables(s, d),
-        s"${System.getProperty("java.io.tmpdir")}/graft-catwh")),
+      Joins.keyedDistinctJoin(Tables(catalogSession(s), d), catalogWarehouse)),
     "q_store_constraints" -> ((s, d) =>
       Joins.storeConstraintsRead(Tables(s, d),
         s"${System.getProperty("java.io.tmpdir")}/graft-catwh")),
@@ -688,42 +678,45 @@ object SparkEntry {
   /** kinesis_topic/main.go:23 — the demo topic payload. */
   val TopicMessage = "THIS IS THIS MESSAGE PAYLOAD THAT WILL GO TO THE USER!!!!!"
 
-  /** The conf-off control session for q_top_events_window_ctl, cached
-    * per parent so its one-time SessionState bootstrap is paid once —
-    * not inside the control query's timed window, which exists to
-    * compare the window plan against the grafted operator, not to
-    * measure session creation. Bench pre-creates it during warm-up.
+  /** A clone of `parent` with `confs` set, so a gate key that needs
+    * its own confs leaves the caller's session as it found it. One clone
+    * per (parent, confs), so its one-time SessionState bootstrap is paid
+    * once, not inside a key's timed window; Bench pre-creates the
+    * control clone during warm-up.
     *
     * Weak keys: a clone shares the parent's SparkContext, not the
     * parent object, so a stopped/discarded parent session (and its
-    * cached clone entry) stays collectable — a long-lived JVM cycling
+    * cached clones) stays collectable — a long-lived JVM cycling
     * sessions must not pin dead SessionStates forever.
     */
-  private val ctlSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
+  private val scoped =
+    new java.util.WeakHashMap[SparkSession, Map[Seq[(String, String)], SparkSession]]()
 
-  def controlSession(parent: SparkSession): SparkSession = ctlSessions.synchronized {
-    Option(ctlSessions.get(parent)).getOrElse {
+  def scopedSession(parent: SparkSession, confs: (String, String)*): SparkSession = scoped.synchronized {
+    val clones = Option(scoped.get(parent)).getOrElse(Map.empty)
+    clones.getOrElse(confs, {
       val c = parent.newSession()
-      c.conf.set("spark.graft.topk.autoRewrite", "false")
-      ctlSessions.put(parent, c)
+      confs.foreach { case (k, v) => c.conf.set(k, v) }
+      scoped.put(parent, clones + (confs -> c))
       c
-    }
+    })
   }
 
-  /** Cloned session for the storage-partitioned-join key: the SPJ
-    * confs (v2 bucketing, superset co-partition keys) are set by the
-    * operator on ITS session only — same isolation contract as
-    * [[controlSession]].
+  /** The conf-off control for q_top_events_window_ctl: the row_number
+    * idiom keeps its plain Window plan.
     */
-  private val spjSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
+  def controlSession(parent: SparkSession): SparkSession =
+    scopedSession(parent, "spark.graft.topk.autoRewrite" -> "false")
 
-  def spjSession(parent: SparkSession): SparkSession = spjSessions.synchronized {
-    Option(spjSessions.get(parent)).getOrElse {
-      val c = parent.newSession()
-      spjSessions.put(parent, c)
-      c
-    }
-  }
+  /** The catalog keys' session: `graftcat` is a
+    * [[graft.sources.GraftCatalog]] over [[catalogWarehouse]].
+    */
+  private def catalogSession(parent: SparkSession): SparkSession =
+    scopedSession(parent,
+      "spark.sql.catalog.graftcat"           -> "graft.sources.GraftCatalog",
+      "spark.sql.catalog.graftcat.warehouse" -> catalogWarehouse)
+
+  private def catalogWarehouse: String = s"${System.getProperty("java.io.tmpdir")}/graft-catwh"
 
   /** DuckDB-dialect oracle for each SQL-expressible query. Column names
     * and row ordering match the Spark plans exactly.

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,25 +9,11 @@ object Verify {
     // comma-separated query names — dump just those
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // the gate runs THROUGH the engine's extensions (kernel functions +
     // the TopKPerKey rewrite), so optimizer-grafted plans are what the
     // DuckDB hash compare verifies — not just the vanilla ones
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // cap the SQL status store (tracked even with the UI off): ~2000
-      // materializations deep it taxes every driver round trip — see
-      // Bench.scala for the measurement
-      .config("spark.sql.ui.retainedExecutions", "16")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
     // corpus canary folded into the gate harness (ADVICE r12): the
     // q_stream_sessions derivation from the capped-session drain is

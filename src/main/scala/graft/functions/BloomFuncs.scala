@@ -17,14 +17,16 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   * `DataFrameStatFunctions.bloomFilter` collect.
   */
 object BloomFuncs {
-  def register(spark: SparkSession): Unit =
-    registerMissing(spark)(
-      ("bloom_agg", {
-        case Seq(c)       => new BloomFilterAggregate(c)
-        case Seq(c, n)    => new BloomFilterAggregate(c, n)
-        case Seq(c, n, b) => new BloomFilterAggregate(c, n, b)
-        case _ => throw new IllegalArgumentException("bloom_agg(col[, estItems[, numBits]])")
-      }),
-      ("bloom_might_contain", exprs => BloomFilterMightContain(exprs.head, exprs(1)))
-    )
+  val kernels: Seq[Kernel] = Seq(
+    Kernel("bloom_agg", classOf[BloomFilterAggregate], {
+      case Seq(c)       => new BloomFilterAggregate(c)
+      case Seq(c, n)    => new BloomFilterAggregate(c, n)
+      case Seq(c, n, b) => new BloomFilterAggregate(c, n, b)
+      case _ => throw new IllegalArgumentException("bloom_agg(col[, estItems[, numBits]])")
+    }),
+    Kernel("bloom_might_contain", classOf[BloomFilterMightContain],
+      exprs => BloomFilterMightContain(exprs.head, exprs(1)))
+  )
+
+  def register(spark: SparkSession): Unit = registerMissing(spark, kernels)
 }

@@ -150,6 +150,8 @@ object FreqItemsAgg {
     */
   val Capacity = 48
 
-  def register(spark: SparkSession): Unit =
-    registerMissing(spark)(("mg_candidates", exprs => MisraGriesCandidates(exprs.head)))
+  val kernels: Seq[Kernel] =
+    Seq(Kernel("mg_candidates", classOf[MisraGriesCandidates], exprs => MisraGriesCandidates(exprs.head)))
+
+  def register(spark: SparkSession): Unit = registerMissing(spark, kernels)
 }

@@ -115,6 +115,7 @@ object HyperplaneExpr {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  def register(spark: SparkSession): Unit =
-    registerMissing(spark)(("lsh_buckets", exprs => LshBuckets(exprs.head)))
+  val kernels: Seq[Kernel] = Seq(Kernel("lsh_buckets", LshBuckets.getClass, exprs => LshBuckets(exprs.head)))
+
+  def register(spark: SparkSession): Unit = registerMissing(spark, kernels)
 }

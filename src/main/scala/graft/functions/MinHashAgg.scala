@@ -81,6 +81,8 @@ case class MinHashUnion(
 }
 
 object MinHashAgg {
-  def register(spark: SparkSession): Unit =
-    registerMissing(spark)(("minhash_union", exprs => MinHashUnion(exprs.head)))
+  val kernels: Seq[Kernel] =
+    Seq(Kernel("minhash_union", classOf[MinHashUnion], exprs => MinHashUnion(exprs.head)))
+
+  def register(spark: SparkSession): Unit = registerMissing(spark, kernels)
 }

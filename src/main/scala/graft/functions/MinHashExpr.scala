@@ -83,6 +83,7 @@ object MinHashExpr {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  def register(spark: SparkSession): Unit =
-    registerMissing(spark)(("minhash_sig", exprs => MinHashSig(exprs.head)))
+  val kernels: Seq[Kernel] = Seq(Kernel("minhash_sig", MinHashSig.getClass, exprs => MinHashSig(exprs.head)))
+
+  def register(spark: SparkSession): Unit = registerMissing(spark, kernels)
 }

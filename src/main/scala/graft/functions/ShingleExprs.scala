@@ -266,12 +266,13 @@ object ShingleExprs {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  def register(spark: SparkSession): Unit =
-    registerMissing(spark)(
-      ("shingles",        exprs => Shingles(exprs.head)),
-      ("minhash_sig_str", exprs => MinHashSigStr(exprs.head)),
-      ("kgram_hashes",    exprs => KgramHashes(exprs(0), exprs(1))),
-      ("bigram_stats",    exprs => BigramStats(exprs.head)),
-      ("band_keys",       exprs => BandKeys(exprs.head))
-    )
+  val kernels: Seq[Kernel] = Seq(
+    Kernel("shingles",        Shingles.getClass,      exprs => Shingles(exprs.head)),
+    Kernel("minhash_sig_str", MinHashSigStr.getClass, exprs => MinHashSigStr(exprs.head)),
+    Kernel("kgram_hashes",    KgramHashes.getClass,   exprs => KgramHashes(exprs(0), exprs(1))),
+    Kernel("bigram_stats",    BigramStats.getClass,   exprs => BigramStats(exprs.head)),
+    Kernel("band_keys",       classOf[BandKeys],      exprs => BandKeys(exprs.head))
+  )
+
+  def register(spark: SparkSession): Unit = registerMissing(spark, kernels)
 }

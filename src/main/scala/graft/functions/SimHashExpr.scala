@@ -71,6 +71,7 @@ object SimHashExpr {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  def register(spark: SparkSession): Unit =
-    registerMissing(spark)(("simhash64", exprs => SimHash64(exprs.head)))
+  val kernels: Seq[Kernel] = Seq(Kernel("simhash64", SimHash64.getClass, exprs => SimHash64(exprs.head)))
+
+  def register(spark: SparkSession): Unit = registerMissing(spark, kernels)
 }

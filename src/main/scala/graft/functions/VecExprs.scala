@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -249,16 +249,18 @@ object VecExprs {
       copy(left = l, right = r)
   }
 
-  /** Idempotent per-session registration: `vec_dot(a, b)`,
-    * `vec_norm(a)`, `mat_dots(v, m)`, `mat_dots_off(v, m, o)` become
-    * available to `expr(...)`/SQL.
+  /** `vec_dot(a, b)`, `vec_norm(a)`, `mat_dots(v, matrix)`,
+    * `pq_codes(resid, codebooks, offsets)` and `pq_adc(lut, codes)` as
+    * SQL functions.
     */
-  def register(spark: SparkSession): Unit =
-    registerMissing(spark)(
-      ("vec_dot",  exprs => VecDot(exprs(0), exprs(1))),
-      ("vec_norm", exprs => VecNorm(exprs.head)),
-      ("mat_dots", exprs => MatDots(exprs(0), exprs(1))),
-      ("pq_codes", exprs => PqCodes(exprs(0), exprs(1), exprs(2))),
-      ("pq_adc",   exprs => PqAdc(exprs(0), exprs(1)))
-    )
+  val kernels: Seq[Kernel] = Seq(
+    Kernel("vec_dot",  VecDot.getClass,   exprs => VecDot(exprs(0), exprs(1))),
+    Kernel("vec_norm", VecNorm.getClass,  exprs => VecNorm(exprs.head)),
+    Kernel("mat_dots", classOf[MatDots],  exprs => MatDots(exprs(0), exprs(1))),
+    Kernel("pq_codes", classOf[PqCodes],  exprs => PqCodes(exprs(0), exprs(1), exprs(2))),
+    Kernel("pq_adc",   classOf[PqAdc],    exprs => PqAdc(exprs(0), exprs(1)))
+  )
+
+  /** Idempotent per-session registration of [[kernels]]. */
+  def register(spark: SparkSession): Unit = registerMissing(spark, kernels)
 }

@@ -83,6 +83,8 @@ object WinnowExpr {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  def register(spark: SparkSession): Unit =
-    registerMissing(spark)(("winnow_fp", exprs => WinnowFingerprint(exprs.head)))
+  val kernels: Seq[Kernel] =
+    Seq(Kernel("winnow_fp", WinnowFingerprint.getClass, exprs => WinnowFingerprint(exprs.head)))
+
+  def register(spark: SparkSession): Unit = registerMissing(spark, kernels)
 }

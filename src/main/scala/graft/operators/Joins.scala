@@ -125,17 +125,15 @@ object Joins {
     * Two per-user profiles (purchase cents / click counts) are
     * published into co-bucketed stores and joined back. Values must
     * equal the store-free oracle over raw events — the layout changes
-    * the PLAN, never the values (B19's contract). Session confs are
-    * set HERE (v2 bucketing on; co-partition superset-keys allowed —
-    * join keys ⊋ partition key is co-located since equal keys imply
-    * equal buckets): callers pass a dedicated session, the gate uses
-    * the cloned-session pattern so the toggles cannot leak into other
-    * keys. ContentStoreSpec asserts the zero-Exchange plan.
+    * the PLAN, never the values (B19's contract). The plan is
+    * shuffle-free on a session with v2 bucketing on and co-partition
+    * superset-keys allowed (join keys ⊋ partition key is co-located
+    * since equal keys imply equal buckets); the gate key runs on a
+    * `SparkEntry.scopedSession` with both confs, so they cannot leak
+    * into other keys. ContentStoreSpec asserts the zero-Exchange plan.
     */
   def spjStoreJoin(t: Tables, storeDir: String, buckets: Int = 8): DataFrame = {
     val spark = t.spark
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
     val hconf = spark.sessionState.newHadoopConf()
     val (dirA, dirB) = (s"$storeDir/purchases", s"$storeDir/clicks")
     // the store is append-only; a repeated run (bench warmup) must not
@@ -847,13 +845,10 @@ object Joins {
     * columnar gate filters on the clustered key, so the catalog scan
     * also exercises planning-time file skipping + column pruning on
     * the SQL path (spec-pinned in SqlSurfaceSpec; the gate checks
-    * values).
+    * values). These catalog fixtures resolve `graftcat` on `t.spark`,
+    * which must name a GraftCatalog over `warehouse`; the gate keys run
+    * them on such a `SparkEntry.scopedSession`.
     */
-  private def catalogConf(spark: org.apache.spark.sql.SparkSession, warehouse: String): Unit = {
-    spark.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.graftcat.warehouse", warehouse)
-  }
-
   def catalogKvRead(t: Tables, warehouse: String): DataFrame = {
     val spark   = t.spark
     val dir     = s"$warehouse/profile_kv"
@@ -869,7 +864,6 @@ object Joins {
       .repartitionByRange(4, col("result_key"))
       .write.format("graft.sources.ContentStore").option("path", dir)
       .mode("append").save()
-    catalogConf(spark, warehouse)
     spark.sql(
       """SELECT result_key, CAST(payload AS BIGINT) AS purchase_cents
         |FROM graftcat.profile_kv ORDER BY result_key""".stripMargin)
@@ -887,7 +881,6 @@ object Joins {
       graft.sources.ParquetEpochs.append(
         slice.repartitionByRange(4, col("doc_id")).sortWithinPartitions("doc_id"), dir): Unit
     }
-    catalogConf(spark, warehouse)
     spark.sql(
       s"""SELECT doc_id, lang, n_chars FROM graftcat.docs_col
          |WHERE doc_id BETWEEN $lo AND $hi ORDER BY doc_id""".stripMargin)
@@ -911,7 +904,6 @@ object Joins {
       graft.sources.ParquetEpochs.append(
         slice.repartitionByRange(4, col("doc_id")).sortWithinPartitions("doc_id"), dir): Unit
     }
-    catalogConf(spark, warehouse)
     spark.sql(
       "DELETE FROM graftcat.docs_sqldel WHERE doc_id IN (3, 5, 8, 13, 21, 34, 55, 89, 144, 233)")
     spark.sql(
@@ -937,7 +929,6 @@ object Joins {
       val (fs, p) = graft.sources.ContentStore.fs(s"$warehouse/$n", hconf)
       fs.delete(p, true): Unit
     }
-    catalogConf(spark, warehouse)
     t.documents.createOrReplaceTempView("documents_create_src")
     // Two INDEPENDENT bootstrap legs (guide §2.6): the columnar chain
     // (CREATE → INSERT → CTAS, each step depending on the previous)
@@ -986,7 +977,6 @@ object Joins {
     val spark = t.spark
     val dir   = s"$warehouse/docs_ovr"
     seedClusteredDocs(t, dir)
-    catalogConf(spark, warehouse)
     t.documents.createOrReplaceTempView("documents_ovr_src")
     spark.sql(
       """INSERT OVERWRITE graftcat.docs_ovr
@@ -1019,7 +1009,6 @@ object Joins {
     fs.delete(p, true): Unit
     graft.sources.ParquetEpochs.append(
       t.documents.select("doc_id", "lang", "n_chars"), dir): Unit
-    catalogConf(spark, warehouse)
     spark.sql(
       """CALL graftcat.system.compact(table => 'docs_zsql',
         |  zorder_by => 'doc_id,n_chars', parts => 8)""".stripMargin)
@@ -1061,7 +1050,6 @@ object Joins {
   def catalogDropRoundtrip(t: Tables, warehouse: String): DataFrame = {
     val spark = t.spark
     cleanCatalogAsset(spark, warehouse, "docs_drop")
-    catalogConf(spark, warehouse)
     t.documents.createOrReplaceTempView("documents_drop_src")
     spark.sql(
       "CREATE TABLE graftcat.docs_drop (doc_id BIGINT, lang STRING, n_chars BIGINT)")
@@ -1091,7 +1079,6 @@ object Joins {
     val spark = t.spark
     cleanCatalogAsset(spark, warehouse, "docs_ren_")
     seedClusteredDocs(t, s"$warehouse/docs_ren_src")
-    catalogConf(spark, warehouse)
     spark.sql("ALTER TABLE graftcat.docs_ren_src RENAME TO docs_ren_dst")
     t.documents.createOrReplaceTempView("documents_ren_src")
     spark.sql(
@@ -1116,7 +1103,6 @@ object Joins {
     val spark = t.spark
     val dir   = s"$warehouse/docs_rbk"
     seedClusteredDocs(t, dir)
-    catalogConf(spark, warehouse)
     val tsGood = System.currentTimeMillis()
     Thread.sleep(5) // coarse-mtime boundary: the overwrite lands strictly after
     t.documents.createOrReplaceTempView("documents_rbk_src")
@@ -1144,7 +1130,6 @@ object Joins {
     val spark = t.spark
     val dir   = s"$warehouse/docs_pk"
     seedClusteredDocs(t, dir)
-    catalogConf(spark, warehouse)
     spark.sql(
       "ALTER TABLE graftcat.docs_pk ADD CONSTRAINT docs_pk PRIMARY KEY (doc_id) " +
         "NOT ENFORCED RELY")
@@ -1166,7 +1151,6 @@ object Joins {
     val spark = t.spark
     val dir   = s"$warehouse/docs_upd"
     seedClusteredDocs(t, dir)
-    catalogConf(spark, warehouse)
     spark.sql(
       """UPDATE graftcat.docs_upd SET lang = 'xx'
         |WHERE n_chars < 200 AND doc_id BETWEEN 100 AND 199""".stripMargin)
@@ -1183,7 +1167,6 @@ object Joins {
     val spark = t.spark
     val dir   = s"$warehouse/docs_mrg"
     seedClusteredDocs(t, dir)
-    catalogConf(spark, warehouse)
     t.documents.select("doc_id", "lang", "n_chars")
       .filter(col("doc_id") % 97 === 0)
       .selectExpr("doc_id", "'merged' AS lang", "n_chars")
@@ -1221,7 +1204,6 @@ object Joins {
       .repartitionByRange(4, col("result_key"))
       .write.format("graft.sources.ContentStore").option("path", dir)
       .mode("append").save()
-    catalogConf(spark, warehouse)
     spark.sql(
       "UPDATE graftcat.profile_kvu SET payload = 'flagged' WHERE CAST(payload AS BIGINT) >= 500000")
     spark.sql(

@@ -36,17 +36,6 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, Data
   */
 object KeyDistinct {
 
-  /** Idempotent session registration (the TopK.install pattern) for
-    * sessions built without `spark.sql.extensions=graft.GraftExtensions`
-    * — [[graft.GraftSession.local]] calls this so every engine session
-    * spends RELY keys out of the box.
-    */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(EliminateDistinctOnKey)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ EliminateDistinctOnKey
-    }
-
   object EliminateDistinctOnKey extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan = {
       if (conf.getConfString("spark.graft.keyDistinct.enabled", "true") != "true") return plan

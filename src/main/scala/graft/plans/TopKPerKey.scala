@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Alias,
@@ -32,8 +32,9 @@ import org.apache.spark.sql.types.LongType
   *
   * Wiring is the standard custom-operator stack: a resolved logical
   * node, a planner [[Strategy]] mapping it to [[TopKPerKeyExec]], and
-  * a DataFrame-level API ([[TopK.perKey]]) that injects the strategy
-  * idempotently via `spark.experimental.extraStrategies`.
+  * a DataFrame-level API ([[TopK.perKey]]). `graft.GraftExtensions`
+  * injects the strategy (and the row_number rewrite) into every graft
+  * session.
   */
 object TopK {
 
@@ -257,29 +258,12 @@ object TopK {
     }
   }
 
-  /** Turn the rewrite on for a vanilla session (idempotent). Sessions
-    * built with `spark.sql.extensions=graft.GraftExtensions` get both
-    * pieces injected without this call.
-    */
-  def enableAutoRewrite(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ TopKStrategy
-    }
-    if (!spark.experimental.extraOptimizations.contains(RewriteRowNumberTopK)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteRowNumberTopK
-    }
-  }
-
   /** DataFrame API: top `k` rows per `keyCols` group in the order of
-    * `orderCols`, with a `rnk` column (1-based). Injects the planner
-    * strategy on first use.
+    * `orderCols`, with a `rnk` column (1-based). Plans on a session
+    * built with `graft.GraftExtensions`, which injects [[TopKStrategy]].
     */
   def perKey(df: DataFrame, keyCols: Seq[String], orderCols: Seq[Column], k: Int): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ TopKStrategy
-    }
     val child = df.queryExecution.analyzed
     val key = keyCols.map(n =>
       child.output

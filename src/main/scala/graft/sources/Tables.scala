@@ -59,14 +59,13 @@ final case class Tables(
   def orders: DataFrame     = t(ordersRel)
   def lineitem: DataFrame   = t(lineitemRel)
   /** events.parquet has shipped with two ts layouts: TIMESTAMP(NANOS)
-    * (which Spark 4's vectorized reader rejects — read nanos as long
-    * via the legacy conf and rebuild a microsecond timestamp) and
-    * plain TIMESTAMP_NTZ(MICROS). Normalize BOTH to session-local
-    * TimestampType micros: the session TZ is pinned to UTC, so the
-    * NTZ→LTZ cast is value-identity and every operator sees one type.
+    * (which Spark 4's vectorized reader rejects; a graft session reads
+    * it as a long, see `GraftExtensions.SessionDefaults`, and this
+    * rebuilds a microsecond timestamp) and plain TIMESTAMP_NTZ(MICROS).
+    * Both become TimestampType micros (see `GraftSession` for the UTC
+    * session time zone this relies on).
     */
   def events: DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = t(eventsRel)
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

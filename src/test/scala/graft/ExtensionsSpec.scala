@@ -32,19 +32,9 @@ class ExtensionsSpec extends AnyFunSuite {
   /** The shared-session specs' corpus. */
   private val sfDir = new SparkSpecBase {}.sfDir
 
-  /** The Verify/Bench session shape: extensions injected via conf. */
+  /** The gate's session on two cores, with `confs` on top. */
   private def gateSession(app: String, confs: (String, String)*): SparkSession =
-    confs
-      .foldLeft(
-        SparkSession
-          .builder()
-          .master("local[2]")
-          .appName(app)
-          .config("spark.sql.extensions", "graft.GraftExtensions")
-          .config("spark.sql.shuffle.partitions", "2")
-          .config("spark.ui.enabled", "false")
-      ) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    confs.foldLeft(GraftSession.builder(2).appName(app)) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
 
   /** Generated classes compiled while `body` runs (one per codegen cache miss). */
   private def compilesDuring(body: => Unit): Long = {

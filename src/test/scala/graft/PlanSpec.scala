@@ -172,71 +172,56 @@ class PlanSpec extends SparkSpecBase {
   test("optimizer rule grafts TopKPerKey onto the hand-written row_number idiom") {
     import org.apache.spark.sql.functions.{col, row_number}
     import org.apache.spark.sql.expressions.Window
-    // reference rows BEFORE the rewrite is active — otherwise both
-    // sides run through TopKPerKey and the equality is vacuous
-    val expected = Analytics.topEventsPerUser(tables).collect().map(_.toSeq).toSeq
-    graft.plans.TopK.enableAutoRewrite(spark)
-    try {
-      val w = Window.partitionBy("user_id").orderBy(col("value").desc, col("event_id"))
-      val idiom = tables.events
-        .select("user_id", "event_id", "event_type", "value")
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 3)
-        .orderBy("user_id", "rnk")
-      val plan = executedPlanString(idiom)
-      assert(plan.contains("TopKPerKey"), s"rule did not fire:\n$plan")
-      // WindowExec must be gone; WindowGroupLimit may remain — that is
-      // Spark's own map-side pre-limit, a free partial top-k upstream
-      // of the heap operator
-      assert(!plan.contains("Window ["), s"window survived the rewrite:\n$plan")
-      // identical rows to the un-rewritten window query
-      assert(idiom.collect().map(_.toSeq).toSeq == expected)
-    } finally {
-      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations
-        .filterNot(_ == graft.plans.TopK.RewriteRowNumberTopK)
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies
-        .filterNot(_ == graft.plans.TopK.TopKStrategy)
-    }
+    // reference rows with the rewrite off — otherwise both sides run
+    // through TopKPerKey and the equality is vacuous
+    val ctl = graft.sources.Tables(SparkEntry.controlSession(spark), sfDir)
+    val expected = Analytics.topEventsPerUser(ctl).collect().map(_.toSeq).toSeq
+    val w = Window.partitionBy("user_id").orderBy(col("value").desc, col("event_id"))
+    val idiom = tables.events
+      .select("user_id", "event_id", "event_type", "value")
+      .withColumn("rnk", row_number().over(w).cast("long"))
+      .filter(col("rnk") <= 3)
+      .orderBy("user_id", "rnk")
+    val plan = executedPlanString(idiom)
+    assert(plan.contains("TopKPerKey"), s"rule did not fire:\n$plan")
+    // WindowExec must be gone; WindowGroupLimit may remain — that is
+    // Spark's own map-side pre-limit, a free partial top-k upstream
+    // of the heap operator
+    assert(!plan.contains("Window ["), s"window survived the rewrite:\n$plan")
+    // identical rows to the un-rewritten window query
+    assert(idiom.collect().map(_.toSeq).toSeq == expected)
   }
 
   test("rewrite rule leaves degenerate rank bounds to the window") {
     import org.apache.spark.sql.functions.{col, row_number}
     import org.apache.spark.sql.expressions.Window
-    graft.plans.TopK.enableAutoRewrite(spark)
-    try {
-      val w = Window.partitionBy("user_id").orderBy(col("value").desc, col("event_id"))
-      def planOf(bound: Long): (String, Long) = {
-        val df = tables.events
-          .select("user_id", "event_id", "value")
-          .withColumn("rnk", row_number().over(w).cast("long"))
-          .filter(col("rnk") <= bound)
-        (executedPlanString(df), df.count())
-      }
-      // a bound past Int.MaxValue means "keep everything" — must NOT
-      // rewrite (a truncated k would silently drop rows / size a 2^31 heap)
-      val (hugePlan, hugeCount) = planOf(Int.MaxValue.toLong + 66L)
-      assert(!hugePlan.contains("TopKPerKey"), s"rewrote an unrepresentable bound:\n$hugePlan")
-      assert(hugeCount == tables.events.count(), "huge bound must keep every row")
-      // a representable bound still rewrites
-      val (okPlan, okCount) = planOf(2L)
-      assert(okPlan.contains("TopKPerKey"), s"did not rewrite k=2:\n$okPlan")
-      assert(okCount > 0)
-      // the argmax idiom (rnk = 1) rewrites to top-1; rnk = 2 (keep
-      // only the SECOND row per key) must not
-      val argmax = tables.events
+    val w = Window.partitionBy("user_id").orderBy(col("value").desc, col("event_id"))
+    def planOf(bound: Long): (String, Long) = {
+      val df = tables.events
         .select("user_id", "event_id", "value")
         .withColumn("rnk", row_number().over(w).cast("long"))
-      val top1 = argmax.filter(col("rnk") === 1L)
-      assert(executedPlanString(top1).contains("TopKPerKey"), "rnk=1 should rewrite")
-      assert(top1.count() == tables.events.select("user_id").distinct().count())
-      val second = argmax.filter(col("rnk") === 2L)
-      assert(!executedPlanString(second).contains("TopKPerKey"), "rnk=2 must NOT rewrite")
-    } finally {
-      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations
-        .filterNot(_ == graft.plans.TopK.RewriteRowNumberTopK)
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies
-        .filterNot(_ == graft.plans.TopK.TopKStrategy)
+        .filter(col("rnk") <= bound)
+      (executedPlanString(df), df.count())
     }
+    // a bound past Int.MaxValue means "keep everything" — must NOT
+    // rewrite (a truncated k would silently drop rows / size a 2^31 heap)
+    val (hugePlan, hugeCount) = planOf(Int.MaxValue.toLong + 66L)
+    assert(!hugePlan.contains("TopKPerKey"), s"rewrote an unrepresentable bound:\n$hugePlan")
+    assert(hugeCount == tables.events.count(), "huge bound must keep every row")
+    // a representable bound still rewrites
+    val (okPlan, okCount) = planOf(2L)
+    assert(okPlan.contains("TopKPerKey"), s"did not rewrite k=2:\n$okPlan")
+    assert(okCount > 0)
+    // the argmax idiom (rnk = 1) rewrites to top-1; rnk = 2 (keep
+    // only the SECOND row per key) must not
+    val argmax = tables.events
+      .select("user_id", "event_id", "value")
+      .withColumn("rnk", row_number().over(w).cast("long"))
+    val top1 = argmax.filter(col("rnk") === 1L)
+    assert(executedPlanString(top1).contains("TopKPerKey"), "rnk=1 should rewrite")
+    assert(top1.count() == tables.events.select("user_id").distinct().count())
+    val second = argmax.filter(col("rnk") === 2L)
+    assert(!executedPlanString(second).contains("TopKPerKey"), "rnk=2 must NOT rewrite")
   }
 
   test("topk operator plans as TopKPerKeyExec — no Window, no per-group sort") {
@@ -244,9 +229,10 @@ class PlanSpec extends SparkSpecBase {
     val plan = executedPlanString(df)
     assert(plan.contains("TopKPerKey"), s"custom operator not planned:\n$plan")
     assert(!plan.contains("Window"), s"fell back to a window:\n$plan")
-    // result must equal the window-based B4 exactly
+    // result must equal the window-based B4 exactly (rewrite off)
     val fast = df.collect().map(_.toSeq)
-    val ref  = Analytics.topEventsPerUser(tables).collect().map(_.toSeq)
+    val ref  = Analytics.topEventsPerUser(graft.sources.Tables(SparkEntry.controlSession(spark), sfDir))
+      .collect().map(_.toSeq)
     assert(fast.toSeq == ref.toSeq)
   }
 

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -20,14 +19,9 @@ import org.apache.spark.sql.streaming.Trigger
 object ScratchColumnarTail {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps  = sys.env.getOrElse("SPARK_GRAFT_TAIL_REPS", "200").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     val root  = Files.createTempDirectory("graft-tailbench")
     val store = root.resolve("store").toString
     val fat = sys.env.getOrElse("SPARK_GRAFT_TAIL_FAT", "1").toInt

@@ -2,18 +2,12 @@ package graft
 
 import graft.operators.Dedup
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
 
 /** Scratch (test scope): profile the component-resolution loop. */
 object ScratchComponents {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     val t = Tables(spark, sfDir)
     var t0 = System.nanoTime()
     val pairs = Dedup.ngramJaccard(t).select("doc_a", "doc_b").localCheckpoint()

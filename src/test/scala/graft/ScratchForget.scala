@@ -3,21 +3,14 @@ package graft
 import graft.operators.{Dedup, Similarity}
 import graft.sources.{ContentStore, ParquetEpochs, StoreLifecycle, Tables}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch phase-timing for the q_store_forget fixture+cascade. */
 object ScratchForget {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Scratch plan dumper (test scope): writes `explain("formatted")` of
   * the named SparkEntry queries to <outDir>/<query>_<suffix>.txt —
@@ -13,14 +12,8 @@ object ScratchPlanDump {
     val suffix = args(1)
     val names  = args.drop(2).toSeq
     val sfDir  = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) {
       try {

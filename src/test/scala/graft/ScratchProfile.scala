@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -18,18 +17,13 @@ import scala.collection.mutable.ArrayBuffer
 object ScratchProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // ad-hoc conf probes: SPARK_GRAFT_PROFILE_CONF="k=v;k2=v2"
     val extraConf = sys.env.getOrElse("SPARK_GRAFT_PROFILE_CONF", "")
       .split(';').filter(_.contains('=')).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k, v)
       }
-    val spark = extraConf.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "16")
-      .config("spark.sql.extensions", "graft.GraftExtensions")) { case (b, (k, v)) => b.config(k, v) }
+    val spark = extraConf.foldLeft(GraftSession.builder(cpus)) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // same warm-up as Bench

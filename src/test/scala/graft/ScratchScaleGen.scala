@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch scaled-corpus generator (test scope, not shipped): builds a
@@ -31,13 +30,8 @@ object ScratchScaleGen {
     val out   = args(0)
     val k     = if (args.length > 1) args(1).toInt else 8
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
     val outP = java.nio.file.Paths.get(out)
     java.nio.file.Files.createDirectories(outP)
     val docs   = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session + sf0.001 tables for all specs. One session
-  * per forked test JVM (getOrCreate), so suites don't pay startup.
+  * per forked test JVM (getOrCreate), so suites don't pay startup. It
+  * is the gate's session ([[GraftSession.local]]), so the specs run
+  * under the same extensions and optimizer rules as Verify and Bench.
   */
 trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpecBase.session

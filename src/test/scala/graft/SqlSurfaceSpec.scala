@@ -6,8 +6,8 @@ import graft.operators.{Dedup, Paging, Temporal}
   * means it is ALSO reachable from pure `spark.sql` over registered
   * views — a user can drive the engine from SQL alone (the reference's
   * own interface to its page queries, lcount.go:171-196, was SQL).
-  * Custom codegen kernels participate because GraftSession /
-  * GraftExtensions register them as SQL functions.
+  * Custom codegen kernels participate because GraftExtensions, which
+  * every GraftSession loads, injects them as SQL functions.
   */
 class SqlSurfaceSpec extends SparkSpecBase {
 
@@ -113,11 +113,15 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
 
   test("registering a kernel twice leaves the function registry unchanged") {
-    // a fresh session holds only Spark's built-ins: no GraftExtensions,
-    // no GraftSession registrations
+    // a fresh session of the contract resolves every kernel before any
+    // operator runs: GraftExtensions injected them all
     val s   = spark.newSession()
     val reg = s.sessionState.functionRegistry
+    val unresolved = graft.functions.kernels.filterNot(k => reg.functionExists(k.id)).map(_.name)
+    assert(unresolved.isEmpty, s"kernels the contract session does not resolve: $unresolved")
+    // without the entry, register adds it once
     val id  = org.apache.spark.sql.catalyst.FunctionIdentifier("shingles")
+    assert(reg.dropFunction(id))
     assert(!reg.functionExists(id))
     graft.functions.ShingleExprs.register(s)
     val (names, info) = (reg.listFunction().toSet, reg.lookupFunction(id).get)
