@@ -7,7 +7,15 @@ import org.apache.spark.sql.graft.Bridge
   * kernels (every entry of `graft.functions.kernels`) first-class SQL
   * functions in any session built with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")`, and
-  * injects the TopKPerKey rewrite and the RELY-key distinct rule.
+  * injects the TopKPerKey rewrite, the RELY-key distinct rule and one
+  * query-stage prep rule, [[graft.plans.SmallSort.UnsampledRange]]: a
+  * global sort whose input is at most
+  * `spark.sql.adaptive.coalescePartitions.minPartitionSize` plans a
+  * one-partition range exchange, which needs no sampling job. The
+  * bound is AQE's own: `CoalesceShufflePartitions` never aims below
+  * that size, so it folds such a shuffle into one partition anyway, and
+  * the rule changes no partition count, only the job that sampled the
+  * ranges. It adds no setting.
   *
   * (The operators' per-session `register` helpers skip a name the
   * session already resolves, so on such a session they do nothing; on
@@ -44,6 +52,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // B97: SELECT DISTINCT over a RELY-keyed table deletes its
     // aggregate (and the exchange the planner would wrap around it)
     ext.injectOptimizerRule(_ => graft.plans.KeyDistinct.EliminateDistinctOnKey)
+    // a small global sort plans a one-partition range exchange (no sampling job)
+    ext.injectQueryStagePrepRule(_ => graft.plans.SmallSort.UnsampledRange)
     graft.functions.kernels.foreach(k => ext.injectFunction((k.id, k.info, k.builder)))
   }
 }

@@ -821,7 +821,7 @@ object SparkEntry {
           .toDF())
   }
 
-  private def withRocksDb[T](s: SparkSession)(body: => T): T =
+  private[graft] def withRocksDb[T](s: SparkSession)(body: => T): T =
     GraftSession.withConfs(s, "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 

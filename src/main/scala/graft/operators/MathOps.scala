@@ -16,8 +16,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * we key by md5 over the record identity instead so results are
   * deterministic and idempotent under retry — at 100 TB re-running a
   * failed task MUST NOT mint new keys (exactly-once sink semantics).
-  * All expressions are built-in functions → whole-stage codegen, no
-  * shuffle at all: this pipelines at scan speed on any cluster size.
+  * All expressions are built-in functions, so each map is one
+  * whole-stage-codegen pass over the scan. Every result then ends in a
+  * global `orderBy`, which is one range-partitioned shuffle (planned
+  * with one partition and no sampling job when the input is small;
+  * see `graft.plans.SmallSort`).
   */
 object MathOps {
 

@@ -15,10 +15,14 @@ import org.apache.spark.sql.functions._
   * Scale notes: the reference paginates with a global
   * `ORDER BY userid LIMIT/OFFSET` per page (s3_lambda/download.go:
   * 383-416) — O(pages) repeated scans and a total order, inherently
-  * serial. We keep an oracle-matching single-topic variant (the
-  * window is per-topic so the sort is one partition's worth) and
-  * [[pagesScalable]] which numbers rows per topic in ONE pass with a
+  * serial. We keep an oracle-matching single-topic variant,
+  * [[pageArns]]: its window has no partition spec, but Spark plans the
+  * `rn <= page·size` filter as a per-partition top-(page·size) below
+  * it (`TakeOrderedAndProject`), so one task ranks at most page·size
+  * rows. [[pagesScalable]] numbers rows per topic in ONE pass with a
   * partitioned window — one shuffle on topic, linear scale-out.
+  * [[sqsBatches]] and [[firstLastPageNotifications]] need only device
+  * counts, so they rank no device rows at all.
   */
 object Paging {
 
@@ -44,11 +48,11 @@ object Paging {
   def topicPageCounts(t: Tables): DataFrame =
     devices(t)
       .groupBy("topic_id")
-      .agg(
-        count(lit(1)).as("n_devices"),
-        (floor(count(lit(1)) / PageSize) + 1).cast("long").as("page_count")
-      )
+      .agg(count(lit(1)).as("n_devices"), pageCount.as("page_count"))
       .orderBy("topic_id")
+
+  /** A topic's page count as an aggregate: `count/pagesize + 1`. */
+  private def pageCount = (floor(count(lit(1)) / PageSize) + 1).cast("long")
 
   /** A5: settings-table override with computed fallback —
     * lambda_count/lcount.go:185-196 & 131-136 (use lambdasettings value
@@ -114,16 +118,24 @@ object Paging {
   }
 
   /** A7: fixed-size SQS batches of 10 — lambda_page/lpage.go:135-146.
-    * Batch id per topic page stream; per-batch size rollup.
+    * Devices in (user_id, device_id) order are cut into batches of
+    * [[BatchSize]], so a topic's batches depend only on its device count
+    * n: batch b holds ranks 10b+1 … min(10b+10, n). One global count,
+    * then one row per batch from `sequence`; no device row is ranked or
+    * moved to one task. A topic without devices has no batches.
     */
   def sqsBatches(t: Tables, topicId: Long): DataFrame = {
-    val w = Window.orderBy("user_id", "device_id")
+    val (n, b) = (col("n_devices"), col("batch_id"))
     devices(t)
       .filter(col("topic_id") === topicId)
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .withColumn("batch_id", (floor((col("rn") - 1) / BatchSize)).cast("long"))
-      .groupBy("batch_id")
-      .agg(count(lit(1)).as("batch_size"), min(col("rn")).as("first_rn"), max(col("rn")).as("last_rn"))
+      .agg(count(lit(1)).as("n_devices"))
+      .select(n, explode(when(n > 0, sequence(lit(0L), floor((n - 1) / BatchSize)))).as("batch_id"))
+      .select(
+        b,
+        least(n - b * BatchSize, lit(BatchSize.toLong)).as("batch_size"),
+        (b * BatchSize + 1).as("first_rn"),
+        least(b * BatchSize + BatchSize, n).as("last_rn")
+      )
       .orderBy("batch_id")
   }
 
@@ -166,22 +178,24 @@ object Paging {
   /** A9: first/last-page notification rows — lambda_count/lcount.go:
     * 139-156 (SNS publish on 1st and last page), lambda_page/lpage.go:
     * 166-173. A topic with one page emits both rows, like the
-    * reference does.
+    * reference does. One aggregate gives each topic's page count, and
+    * `stack` turns it into the two rows.
     */
-  def firstLastPageNotifications(t: Tables): DataFrame = {
-    val pc    = topicPageCounts(t)
-    val first = pc.select(
-      col("topic_id"),
-      lit(1L).as("page_num"),
-      lit("Count: 1st page sent").as("message")
-    )
-    val last = pc.select(
-      col("topic_id"),
-      col("page_count").as("page_num"),
-      concat(lit("Count: Last Page Sent: "), col("page_count")).as("message")
-    )
-    first.unionAll(last).orderBy("topic_id", "page_num", "message")
-  }
+  def firstLastPageNotifications(t: Tables): DataFrame =
+    devices(t)
+      .groupBy("topic_id")
+      .agg(pageCount.as("page_count"))
+      .select(
+        col("topic_id"),
+        stack(
+          lit(2),
+          lit(1L),
+          lit("Count: 1st page sent"),
+          col("page_count"),
+          concat(lit("Count: Last Page Sent: "), col("page_count"))
+        ).as(Seq("page_num", "message"))
+      )
+      .orderBy("topic_id", "page_num", "message")
 
   /** A13: end-to-end fan-out volume per topic: devices → pages →
     * SQS batches (lpage.go:126-156 composed).
@@ -191,7 +205,7 @@ object Paging {
       .groupBy("topic_id")
       .agg(
         count(lit(1)).as("n_devices"),
-        (floor(count(lit(1)) / PageSize) + 1).cast("long").as("n_pages"),
+        pageCount.as("n_pages"),
         ceil(count(lit(1)) / lit(BatchSize.toDouble)).cast("long").as("n_batches")
       )
       .orderBy("topic_id")

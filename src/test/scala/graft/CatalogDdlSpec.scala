@@ -13,8 +13,7 @@ class CatalogDdlSpec extends SparkSpecBase {
 
   private def freshCatalog(tag: String): (String, String) = {
     val wh = java.nio.file.Files.createTempDirectory(s"graft-ddl-$tag").toString
-    spark.conf.set(s"spark.sql.catalog.$tag", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$tag.warehouse", wh)
+    useCatalog(tag, wh)
     (tag, wh)
   }
 

@@ -22,8 +22,7 @@ class ConstraintSpec extends SparkSpecBase {
     import spark.implicits._
     val wh  = tmp()
     val dir = s"$wh/t"
-    spark.conf.set("spark.sql.catalog.gcon", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gcon.warehouse", wh)
+    useCatalog("gcon", wh)
     ParquetEpochs.append(Seq((1L, "en"), (2L, "de")).toDF("id", "lang"), dir): Unit
     Constraints.add(spark, dir, "lang_set", "lang IS NOT NULL AND lang != ''")
     // append: a violating batch refuses; NOTHING lands (not even the
@@ -57,8 +56,7 @@ class ConstraintSpec extends SparkSpecBase {
     import spark.implicits._
     val wh  = tmp()
     val dir = s"$wh/t"
-    spark.conf.set("spark.sql.catalog.gsql", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gsql.warehouse", wh)
+    useCatalog("gsql", wh)
     ParquetEpochs.append(Seq((1L, "en")).toDF("id", "lang"), dir): Unit
     spark.sql("ALTER TABLE gsql.t ADD CONSTRAINT lang_set CHECK (lang IS NOT NULL)")
     assert(Constraints.list(dir, spark.sessionState.newHadoopConf())
@@ -121,8 +119,7 @@ class ConstraintSpec extends SparkSpecBase {
     import spark.implicits._
     val wh  = tmp()
     val dir = s"$wh/t"
-    spark.conf.set("spark.sql.catalog.gnn", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gnn.warehouse", wh)
+    useCatalog("gnn", wh)
     ParquetEpochs.append(Seq((1L, "en"), (2L, "de")).toDF("id", "lang"), dir): Unit
     // Spark's analyzer refuses TIGHTENING nullability from SQL before
     // any catalog sees it — the SQL spelling for NOT NULL is the

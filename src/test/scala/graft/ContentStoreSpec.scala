@@ -895,9 +895,7 @@ class ContentStoreSpec extends SparkSpecBase {
       // key — co-location still holds (equal keys ⇒ equal bucket), but
       // the exact-match default would reject it
       "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    GraftSession.withConfs(spark, confs: _*) {
       def store(dir: String) = spark.read.format("graft.sources.ContentStore")
         .option("path", dir).option("bucketedRead", 4).load()
       val a = store(dirA)
@@ -915,9 +913,6 @@ class ContentStoreSpec extends SparkSpecBase {
       agg.collect()
       val aggPlan = agg.queryExecution.executedPlan.toString
       assert(!aggPlan.contains("Exchange"), s"bucket aggregate must not shuffle:\n$aggPlan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 }

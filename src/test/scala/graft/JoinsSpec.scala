@@ -41,10 +41,7 @@ class JoinsSpec extends SparkSpecBase {
     // at spec SF the lineitem side fits the broadcast threshold and AQE
     // never plans a shuffled join at all — disable broadcast so the
     // plan under test is the co-located SMJ the layout exists for
-    val conf = spark.conf
-    val prev = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val wh   = java.nio.file.Files.createTempDirectory("graft-wh-spec").toString
       val plan = finalPlan(Joins.bucketedJoin(tables, wh))
       // the join runs on the bucketed layout...
@@ -58,7 +55,7 @@ class JoinsSpec extends SparkSpecBase {
           !plan.contains("Exchange hashpartitioning(l_orderkey"),
         s"bucketed sides must not re-shuffle on the join key:\n$plan"
       )
-    } finally conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("bucketed join values are identical to the plain join") {

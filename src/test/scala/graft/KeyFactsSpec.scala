@@ -12,8 +12,7 @@ class KeyFactsSpec extends SparkSpecBase {
 
   private def freshCatalog(tag: String): (String, String) = {
     val wh = java.nio.file.Files.createTempDirectory(s"graft-keys-$tag").toString
-    spark.conf.set(s"spark.sql.catalog.$tag", "graft.sources.GraftCatalog")
-    spark.conf.set(s"spark.sql.catalog.$tag.warehouse", wh)
+    useCatalog(tag, wh)
     (tag, wh)
   }
 
@@ -116,12 +115,11 @@ class KeyFactsSpec extends SparkSpecBase {
     val norely = spark.sql(s"SELECT DISTINCT doc_id, lang FROM $cat.dim2")
     assert(norely.queryExecution.optimizedPlan.collect { case a: Aggregate => a }.nonEmpty,
       "a NORELY key must not feed the optimizer")
-    spark.conf.set("spark.graft.keyDistinct.enabled", "false")
-    try {
+    GraftSession.withConfs(spark, "spark.graft.keyDistinct.enabled" -> "false") {
       val off = spark.sql(s"SELECT DISTINCT doc_id, lang FROM $cat.dim")
       assert(off.queryExecution.optimizedPlan.collect { case a: Aggregate => a }.nonEmpty,
         "kill switch must restore the aggregate")
-    } finally spark.conf.set("spark.graft.keyDistinct.enabled", "true")
+    }
     // aliasing the key column breaks attribute identity — no rewrite
     val aliased = spark.sql(
       s"SELECT DISTINCT doc_id + 0 AS d, lang FROM $cat.dim")

@@ -238,21 +238,18 @@ class PlanSpec extends SparkSpecBase {
 
   test("runtime bloom filter prunes the fact side of a selective shuffle join") {
     import org.apache.spark.sql.functions.{col, count, lit}
-    val conf          = spark.conf
-    val prevBroadcast = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevEnabled   = conf.getOption("spark.sql.optimizer.runtime.bloomFilter.enabled")
-    val prevScan =
-      conf.getOption("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-    try {
-      // force a shuffle join (no broadcast) so the optimizer must reach
-      // for the semi-join reduction instead: a bloom filter built from
-      // the selective dim side, pushed into the fact scan — at 100 TB
-      // this is what spares the fact shuffle from carrying rows a
-      // broadcast would have filtered
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // defaults gate the rewrite on a 10GB fact scan — scale it to test SF
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+    // force a shuffle join (no broadcast) so the optimizer must reach
+    // for the semi-join reduction instead: a bloom filter built from
+    // the selective dim side, pushed into the fact scan — at 100 TB
+    // this is what spares the fact shuffle from carrying rows a
+    // broadcast would have filtered; the defaults gate the rewrite on
+    // a 10GB fact scan, so the scan threshold is scaled to test SF
+    GraftSession.withConfs(
+      spark,
+      "spark.sql.autoBroadcastJoinThreshold"                                   -> "-1",
+      "spark.sql.optimizer.runtime.bloomFilter.enabled"                        -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0"
+    ) {
       val dim  = tables.part.filter(col("p_brand") === "Brand#11").select("p_partkey")
       val fact = tables.lineitem.select("l_partkey", "l_quantity")
       val plan = fact
@@ -266,46 +263,27 @@ class PlanSpec extends SparkSpecBase {
         plan.contains("might_contain") || plan.contains("bloom_filter"),
         s"no runtime bloom filter injected:\n$plan"
       )
-    } finally {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      prevEnabled match {
-        case Some(v) => conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", v)
-        case None    => conf.unset("spark.sql.optimizer.runtime.bloomFilter.enabled")
-      }
-      prevScan match {
-        case Some(v) =>
-          conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", v)
-        case None =>
-          conf.unset("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-      }
     }
   }
 
   test("AQE splits a skewed join partition at runtime") {
     import org.apache.spark.sql.functions.{col, count, explode, lit, when}
-    val conf = spark.conf
-    val prev = Map(
-      "spark.sql.autoBroadcastJoinThreshold"                        -> conf.get("spark.sql.autoBroadcastJoinThreshold"),
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> conf.get("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"),
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes"             -> conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"),
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor"           -> conf.get("spark.sql.adaptive.skewJoin.skewedPartitionFactor"),
-      "spark.sql.adaptive.coalescePartitions.enabled"               -> conf.get("spark.sql.adaptive.coalescePartitions.enabled"),
-      "spark.sql.shuffle.partitions"                                -> conf.get("spark.sql.shuffle.partitions")
-    )
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // thresholds scaled to test-SF row counts: one key owns ~half of
-      // the (amplified) left side, so its partition exceeds
-      // factor×median and AQE must split it (OptimizeSkewedJoin)
-      // instead of letting one task drag the stage — the local[*]
-      // miniature of the 100 TB hot-key
-      // sizes are COMPRESSED shuffle bytes — thresholds sized for the
-      // hot partition's ~25k (k, value) rows after compression
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4KB")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2KB")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      conf.set("spark.sql.shuffle.partitions", "8")
+    // thresholds scaled to test-SF row counts: one key owns ~half of
+    // the (amplified) left side, so its partition exceeds
+    // factor×median and AQE must split it (OptimizeSkewedJoin)
+    // instead of letting one task drag the stage — the local[*]
+    // miniature of the 100 TB hot-key
+    // sizes are COMPRESSED shuffle bytes — thresholds sized for the
+    // hot partition's ~25k (k, value) rows after compression
+    GraftSession.withConfs(
+      spark,
+      "spark.sql.autoBroadcastJoinThreshold"                        -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "4KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes"             -> "2KB",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor"           -> "2",
+      "spark.sql.adaptive.coalescePartitions.enabled"               -> "false",
+      "spark.sql.shuffle.partitions"                                -> "8"
+    ) {
       // repartition(8) first: AQE splits a skewed REDUCE partition into
       // ranges of MAP outputs, so a single-mapper input (one parquet
       // file → one task) is unsplittable no matter how skewed — worth
@@ -330,7 +308,7 @@ class PlanSpec extends SparkSpecBase {
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"), s"AQE did not mark the skew join:\n$plan")
       assert(plan.contains("AQEShuffleRead skewed"), s"no skewed shuffle read:\n$plan")
-    } finally prev.foreach { case (k, v) => conf.set(k, v) }
+    }
   }
 
   test("curateFull builds the shingle index once — both dedup branches read the materialized scan") {

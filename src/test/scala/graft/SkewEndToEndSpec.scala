@@ -33,27 +33,17 @@ class SkewEndToEndSpec extends SparkSpecBase {
   }
 
   test("dedup df join-back: AQE splits the hot-shingle partition on the real capped operator") {
-    val conf = spark.conf
-    val prev = Map(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" ->
-        conf.get("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"),
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
-        conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"),
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" ->
-        conf.get("spark.sql.adaptive.skewJoin.skewedPartitionFactor"),
-      "spark.sql.adaptive.coalescePartitions.enabled" ->
-        conf.get("spark.sql.adaptive.coalescePartitions.enabled"),
-      "spark.sql.shuffle.partitions" -> conf.get("spark.sql.shuffle.partitions")
-    )
-    try {
-      // thresholds scaled to test-SF shuffle sizes, same discipline as
-      // PlanSpec's toy-frame test: the hot shingles' partitions must
-      // exceed factor×median for OptimizeSkewedJoin to split them
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8KB")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4KB")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      conf.set("spark.sql.shuffle.partitions", "8")
+    // thresholds scaled to test-SF shuffle sizes, same discipline as
+    // PlanSpec's toy-frame test: the hot shingles' partitions must
+    // exceed factor×median for OptimizeSkewedJoin to split them
+    GraftSession.withConfs(
+      spark,
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes"             -> "4KB",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor"           -> "2",
+      "spark.sql.adaptive.coalescePartitions.enabled"               -> "false",
+      "spark.sql.shuffle.partitions"                                -> "8"
+    ) {
       // boilerplate flood: 120k synthetic 5-word docs over a real sf0.1
       // slice put TWO trigram shingles in ~30% of all posting rows each
       // (vs median partition ~5%) — the hostile-corpus shape. A truly
@@ -103,7 +93,7 @@ class SkewEndToEndSpec extends SparkSpecBase {
         !pairs.exists(r => r.getLong(0) >= 1000000L || r.getLong(1) >= 1000000L),
         "boilerplate-only pairs survived the df cap"
       )
-    } finally prev.foreach { case (k, v) => conf.set(k, v) }
+    }
   }
 
   test("salted join: hot user spreads across all salt buckets and values match the unsalted join") {

@@ -1,7 +1,10 @@
 package graft
 
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session + sf0.001 tables for all specs. One session
@@ -14,10 +17,27 @@ trait SparkSpecBase extends AnyFunSuite {
   val sfDir: String            = "/root/testdata/sf0.001"
   def tables: Tables           = Tables(spark, sfDir)
 
-  /** Delete a spec-created temp tree (call in a finally — temp dirs
-    * outside StreamReplay's shutdown-cleaned root accumulate one per
-    * suite run otherwise).
+  private val catalogTags = scala.collection.mutable.Set.empty[String]
+
+  /** Registers a GraftCatalog named `tag` over the warehouse `wh` for
+    * the running test only: both confs are unset when it ends.
     */
+  def useCatalog(tag: String, wh: String): Unit = {
+    catalogTags += tag
+    spark.conf.set(s"spark.sql.catalog.$tag", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$tag.warehouse", wh)
+  }
+
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test)
+    finally {
+      catalogTags.foreach { tag =>
+        spark.conf.unset(s"spark.sql.catalog.$tag")
+        spark.conf.unset(s"spark.sql.catalog.$tag.warehouse")
+      }
+      catalogTags.clear()
+    }
+
   /** SF directories actually present under /root/testdata — corpus
     * canaries iterate THIS instead of hardcoding the bench-scale SFs,
     * so a checkout with only the required sf0.001 skips (with a note)
@@ -30,6 +50,23 @@ trait SparkSpecBase extends AnyFunSuite {
     present
   }
 
+  /** Every node of `df`'s final plan, after one run: AQE's query
+    * stages and the plans inside them included.
+    */
+  def finalPlanNodes(df: DataFrame): Seq[SparkPlan] = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec        => s +: nodes(s.plan)
+      case _                        => p +: p.children.flatMap(nodes)
+    }
+    df.collect()
+    nodes(df.queryExecution.executedPlan)
+  }
+
+  /** Delete a spec-created temp tree (call in a finally — temp dirs
+    * outside StreamReplay's shutdown-cleaned root accumulate one per
+    * suite run otherwise).
+    */
   def deleteTree(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {
       import scala.jdk.CollectionConverters._

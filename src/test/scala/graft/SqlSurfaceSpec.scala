@@ -133,8 +133,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("catalog: K-V and columnar stores resolve BY NAME; values equal the path-option reads") {
     val wh = java.nio.file.Files.createTempDirectory("graft-catspec").toString
-    spark.conf.set("spark.sql.catalog.gspec", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gspec.warehouse", wh)
+    useCatalog("gspec", wh)
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     // K-V store
@@ -180,8 +179,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("catalog time travel: TIMESTAMP AS OF and VERSION AS OF (pin lease) from SQL") {
     val wh = java.nio.file.Files.createTempDirectory("graft-catspec-tt").toString
-    spark.conf.set("spark.sql.catalog.gtt", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gtt.warehouse", wh)
+    useCatalog("gtt", wh)
     import spark.implicits._
     val dir   = s"$wh/kv"
     val hconf = spark.sessionState.newHadoopConf()
@@ -214,8 +212,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("catalog writes and streams: INSERT INTO by name on both payloads; readStream.table tails") {
     val wh = java.nio.file.Files.createTempDirectory("graft-catspec-w").toString
-    spark.conf.set("spark.sql.catalog.gw", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gw.warehouse", wh)
+    useCatalog("gw", wh)
     import spark.implicits._
     // columnar: seed one epoch, INSERT a second through the catalog —
     // the append protocol verbatim (schema signature enforced)
@@ -263,8 +260,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("catalog discovery and streaming write: SHOW TABLES lists stores; toTable streams into K-V") {
     val wh = java.nio.file.Files.createTempDirectory("graft-catspec-sw").toString
-    spark.conf.set("spark.sql.catalog.gsw", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gsw.warehouse", wh)
+    useCatalog("gsw", wh)
     import spark.implicits._
     Seq(("seed", "0")).toDF("result_key", "payload")
       .write.format("graft.sources.ContentStore").option("path", s"$wh/sink").mode("append").save()
@@ -295,8 +291,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("catalog DELETE: SQL DELETE maps to the store delete verbs; bare DELETE is expire-all") {
     val wh = java.nio.file.Files.createTempDirectory("graft-catspec-del").toString
-    spark.conf.set("spark.sql.catalog.gdel", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gdel.warehouse", wh)
+    useCatalog("gdel", wh)
     import spark.implicits._
     // columnar: IN/= conjuncts intersect (AND semantics); NULL drops
     graft.sources.ParquetEpochs.append(
@@ -350,8 +345,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("catalog row-level DML: UPDATE, MERGE INTO, non-key DELETE via copy-on-write") {
     val wh = java.nio.file.Files.createTempDirectory("graft-catspec-dml").toString
-    spark.conf.set("spark.sql.catalog.gdml", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gdml.warehouse", wh)
+    useCatalog("gdml", wh)
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     // two key-clustered epochs of two files each — pruning observable
@@ -413,8 +407,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("catalog K-V row-level DML: UPDATE payload by key and by value; bucketed refuses") {
     val wh = java.nio.file.Files.createTempDirectory("graft-catspec-kvdml").toString
-    spark.conf.set("spark.sql.catalog.gkv", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gkv.warehouse", wh)
+    useCatalog("gkv", wh)
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     // two clustered epochs of two files each
@@ -462,8 +455,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("catalog DML composes: post-evolution UPDATE writes wide; NOT MATCHED BY SOURCE deletes") {
     val wh = java.nio.file.Files.createTempDirectory("graft-catspec-dmlc").toString
-    spark.conf.set("spark.sql.catalog.gdm2", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gdm2.warehouse", wh)
+    useCatalog("gdm2", wh)
     import spark.implicits._
     graft.sources.ParquetEpochs.append(
       (1L to 6L).map(i => (i, s"v$i")).toDF("id", "v"), s"$wh/t"): Unit
@@ -490,8 +482,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("crashed-DML staged files are vacuum-swept orphans; committed rewrites survive") {
     val wh = java.nio.file.Files.createTempDirectory("graft-catspec-orph").toString
-    spark.conf.set("spark.sql.catalog.gorp", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gorp.warehouse", wh)
+    useCatalog("gorp", wh)
     import spark.implicits._
     graft.sources.ParquetEpochs.append(
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"), s"$wh/t"): Unit
@@ -512,8 +503,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("catalog ALTER TABLE ADD COLUMNS: additive evolution from SQL; other shapes refused") {
     val wh = java.nio.file.Files.createTempDirectory("graft-catspec-alt").toString
-    spark.conf.set("spark.sql.catalog.galt", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.galt.warehouse", wh)
+    useCatalog("galt", wh)
     import spark.implicits._
     graft.sources.ParquetEpochs.append(
       Seq((1L, "a")).toDF("id", "v"), s"$wh/t"): Unit
@@ -534,8 +524,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("catalog columnar scans report real size statistics: small store broadcasts unhinted") {
     val wh = java.nio.file.Files.createTempDirectory("graft-catspec-st").toString
-    spark.conf.set("spark.sql.catalog.gst", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gst.warehouse", wh)
+    useCatalog("gst", wh)
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     graft.sources.ParquetEpochs.append(
@@ -552,8 +541,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("catalog CREATE TABLE / CTAS bootstrap both payloads; refusal cases hold") {
     val wh = java.nio.file.Files.createTempDirectory("graft-catspec-create").toString
-    spark.conf.set("spark.sql.catalog.gcre", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gcre.warehouse", wh)
+    useCatalog("gcre", wh)
     // columnar CREATE: empty typed SELECT, INSERT INTO, read-back
     spark.sql("CREATE TABLE gcre.docs (id BIGINT, lang STRING)")
     assert(spark.sql("SELECT * FROM gcre.docs").count() == 0)
@@ -616,8 +604,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("INSERT OVERWRITE is ONE atomic replacement; pins and time travel keep the old corpus") {
     val wh = java.nio.file.Files.createTempDirectory("graft-catspec-ovr").toString
-    spark.conf.set("spark.sql.catalog.govr", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.govr.warehouse", wh)
+    useCatalog("govr", wh)
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir   = s"$wh/t"
@@ -672,8 +659,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("rollback_to_epoch restores the as-of view metadata-only; history and twins hold") {
     val wh = java.nio.file.Files.createTempDirectory("graft-catspec-rbk").toString
-    spark.conf.set("spark.sql.catalog.grbk", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.grbk.warehouse", wh)
+    useCatalog("grbk", wh)
     import spark.implicits._
     val dir   = s"$wh/t"
     val hconf = spark.sessionState.newHadoopConf()
@@ -782,8 +768,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("SQL maintenance procedures: pin + compact + vacuum + expire driven purely from SQL") {
     val wh = java.nio.file.Files.createTempDirectory("graft-catspec-proc").toString
-    spark.conf.set("spark.sql.catalog.gproc", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gproc.warehouse", wh)
+    useCatalog("gproc", wh)
     import spark.implicits._
     val dir   = s"$wh/t"
     val hconf = spark.sessionState.newHadoopConf()
@@ -854,8 +839,7 @@ class SqlSurfaceSpec extends SparkSpecBase {
 
   test("SQL-driven z-order re-cluster prunes the two-dim box at planning time") {
     val wh = java.nio.file.Files.createTempDirectory("graft-catspec-zsql").toString
-    spark.conf.set("spark.sql.catalog.gz", "graft.sources.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gz.warehouse", wh)
+    useCatalog("gz", wh)
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     // 4096 rows over two independent dims, UNCLUSTERED (one shuffled

@@ -89,8 +89,7 @@ class StoreCrudPropertySpec extends SparkSpecBase {
             val ks = rng.shuffle(keySpace).take(1 + rng.nextInt(3))
             val parent = new java.io.File(dir).getParent
             val table  = new java.io.File(dir).getName
-            spark.conf.set("spark.sql.catalog.gcrudkv", "graft.sources.GraftCatalog")
-            spark.conf.set("spark.sql.catalog.gcrudkv.warehouse", parent)
+            useCatalog("gcrudkv", parent)
             // a never-written dir is not yet a table — the SQL no-ops
             if (new java.io.File(dir, "_manifest").exists) spark.sql(
               s"""UPDATE gcrudkv.`$table` SET payload = concat(payload, 'U')
@@ -234,8 +233,7 @@ class StoreCrudPropertySpec extends SparkSpecBase {
               case _ => // SQL DELETE through the catalog — same contract
                 val parent = new java.io.File(dir).getParent
                 val table  = new java.io.File(dir).getName
-                spark.conf.set("spark.sql.catalog.gcrud", "graft.sources.GraftCatalog")
-                spark.conf.set("spark.sql.catalog.gcrud.warehouse", parent)
+                useCatalog("gcrud", parent)
                 if (new java.io.File(dir, "_manifest").exists) spark.sql(
                   s"DELETE FROM gcrud.`$table` WHERE doc_id IN (${ks.mkString(", ")})"): Unit
             }
@@ -247,8 +245,7 @@ class StoreCrudPropertySpec extends SparkSpecBase {
             val ks = rng.shuffle(ids).take(1 + rng.nextInt(3))
             val parent = new java.io.File(dir).getParent
             val table  = new java.io.File(dir).getName
-            spark.conf.set("spark.sql.catalog.gcrud", "graft.sources.GraftCatalog")
-            spark.conf.set("spark.sql.catalog.gcrud.warehouse", parent)
+            useCatalog("gcrud", parent)
             if (new java.io.File(dir, "_manifest").exists) spark.sql(
               s"""UPDATE gcrud.`$table` SET body = concat(body, 'U')
                  |WHERE doc_id IN (${ks.mkString(", ")})""".stripMargin): Unit

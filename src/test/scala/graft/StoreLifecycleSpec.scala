@@ -326,9 +326,7 @@ class StoreLifecycleSpec extends SparkSpecBase {
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold"   -> "-1",
       "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    GraftSession.withConfs(spark, confs: _*) {
       def store(dir: String) = spark.read.format("graft.sources.ContentStore")
         .option("path", dir).option("bucketedRead", 4).load()
       val joined = store(dirA)
@@ -339,9 +337,6 @@ class StoreLifecycleSpec extends SparkSpecBase {
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
         s"join over compacted co-bucketed stores must stay shuffle-free:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 

@@ -334,12 +334,7 @@ class StreamingSpec extends SparkSpecBase {
   test("capped sessions TWS twin: same finalized sessions via event-time timers (RocksDB)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    try {
+    SparkEntry.withRocksDb(spark) {
       val in  = MemoryStream[(Timestamp, Long, Double)]
       val out = KinesisLikePipeline.cappedSessionCountsTws(in.toDF().toDF("ts", "user_id", "value"))
       val q = out.writeStream
@@ -370,23 +365,13 @@ class StreamingSpec extends SparkSpecBase {
       assert(rows(0).getAs[Long]("n_events") == 5 && rows(0).getAs[Double]("sum_value") == 15.0)
       assert(rows(1).getAs[java.sql.Timestamp]("session_start") == Timestamp.valueOf("2026-01-01 02:05:00"))
       assert(rows(1).getAs[Long]("n_events") == 2 && rows(1).getAs[Double]("sum_value") == 13.0)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None    => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("heavy-hitter monitor: MapState counts accumulate across batches (RocksDB)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    try {
+    SparkEntry.withRocksDb(spark) {
       val in  = MemoryStream[(String, Long)]
       val out = KinesisLikePipeline.heavyHitterMonitor(in.toDF().toDF("event_type", "user_id"))
       val q = out.writeStream
@@ -416,23 +401,13 @@ class StreamingSpec extends SparkSpecBase {
       // final counts: u1=3, u2=3, u3=3, u4=3 over total 12, 4 users —
       // 3·4·10 = 120 vs 12·13 = 156: nobody is heavy once uniform
       assert(epoch2.isEmpty, s"epoch 2 must flag nobody (uniform): ${epoch2.toSeq}")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None    => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("feature buffer: ListState appends across batches, trims to last-k (RocksDB)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    try {
+    SparkEntry.withRocksDb(spark) {
       val in  = MemoryStream[(Long, Long, Long, Long)]
       val out = KinesisLikePipeline.recentFeatureBuffer(
         in.toDF().toDF("user_id", "ts_us", "event_id", "cents"))
@@ -460,11 +435,6 @@ class StreamingSpec extends SparkSpecBase {
       assert(rows.contains((1L, 2L, 4L, Seq(500L, 400L, 300L))), s"epoch2 u1: ${rows.toSeq}")
       // user 2 idle in batch 2: no new snapshot
       assert(rows.count(_._1 == 2L) == 1)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None    => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -757,13 +727,8 @@ class StreamingSpec extends SparkSpecBase {
   test("TWS sequencer TTL evicts idle topic state (numbering restarts)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
     var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    try {
+    SparkEntry.withRocksDb(spark) { try {
       val in = MemoryStream[TopicMsg]
       val out =
         KinesisLikePipeline.pageSequencerTws(spark, in.toDS(), Some(java.time.Duration.ofSeconds(2)))
@@ -795,22 +760,13 @@ class StreamingSpec extends SparkSpecBase {
       // stop in finally: a timed-out await must not leak a running
       // query (and its sink name) into the rest of the suite
       if (q != null) q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None    => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    } }
   }
 
   test("transformWithState sequencer matches the fMGWS twin across triggers (RocksDB state)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    try {
+    SparkEntry.withRocksDb(spark) {
       val in  = MemoryStream[TopicMsg]
       val out = KinesisLikePipeline.pageSequencerTws(spark, in.toDS())
       val q = out.writeStream
@@ -833,11 +789,6 @@ class StreamingSpec extends SparkSpecBase {
       assert(t1m1.last.note == "Count: Last Page Sent: 3")
       assert(rows.filter(r => r.topic_id == 1 && r.message == "m2").map(_.global_seq).toSeq == Seq(4L))
       assert(rows.filter(_.topic_id == 2).map(_.global_seq).toSeq == Seq(1L))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None    => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 

@@ -18,6 +18,13 @@ It also applies the no-regression rule to each metric that has a
 the bound, `unresolved` when the parent's quartile spread is wider than
 the bound (the runs spread too widely to tell), and `ok` otherwise. The
 script exits nonzero when a metric is `worse` or a run failed.
+
+With `--trace`, it then makes one `--trace 1` run per side on one seed
+and prints each per-layer metric of the two reports side by side with
+its change (`spark.jobs`, `spark.job_ms`, ..., and the workload's
+per-operation `operators.*_ms`), so a speed claim can name the layer
+that moved. One traced run per side shows where time went, not that
+it moved: the pairs make that case.
 """
 
 import argparse
@@ -44,10 +51,10 @@ def export_tree(ref, dest):
         sys.exit(f"perf_ab: git archive {ref} failed")
 
 
-def run_side(tree, workload, seed, seconds):
+def run_side(tree, workload, seed, seconds, trace=0):
     """One benchmark run; returns its result dict, or None if it did not finish."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
                           stdin=subprocess.DEVNULL, text=True)
     lines = proc.stdout.strip().splitlines()
@@ -55,6 +62,26 @@ def run_side(tree, workload, seed, seconds):
         sys.stderr.write(proc.stderr[-2000:])
         return None
     return json.loads(lines[-1])
+
+
+def traced_layers(tree, workload, seed, seconds):
+    """One `--trace 1` run; returns its report's per-layer values by name, or None."""
+    res = run_side(tree, workload, seed, seconds, trace=1)
+    if res is None or not res["correct"]:
+        return None
+    report = json.loads((tree / "perfbench" / "results" / f"{workload}-seed{seed}-trace1.json").read_text())
+    return {k: (v["value"], v["unit"]) for k, v in report["per_layer"].items()}
+
+
+def print_layers(parent, change):
+    """One row per per-layer metric that both traced reports hold."""
+    print(f"\n{'per-layer metric (one traced run per side)':<52} {'parent':>12} {'change':>12} {'delta':>12} {'change':>8}")
+    for name in sorted(parent.keys() & change.keys()):
+        (p, unit), (c, _) = parent[name], change[name]
+        if p is None or c is None:
+            continue
+        frac = f"{(c - p) / p:+.1%}" if p else "-"
+        print(f"{name + ' (' + unit + ')':<52} {p:>12.3f} {c:>12.3f} {c - p:>+12.3f} {frac:>8}")
 
 
 def quartiles(xs):
@@ -109,6 +136,8 @@ def main():
     ap.add_argument("--seed-base", type=int, default=None,
                     help="pair i uses seed base+i (default: random)")
     ap.add_argument("--out", help="also write every run and the summary to this JSON file")
+    ap.add_argument("--trace", action="store_true",
+                    help="then make one --trace 1 run per side and print per-layer deltas")
     a = ap.parse_args()
 
     bench = json.loads((ROOT / "BENCHMARK.json").read_text())
@@ -142,6 +171,8 @@ def main():
             else:
                 status = "incomplete (a run failed or had wrong output)"
             print(f"pair {i + 1}/{a.pairs} seed {seed} ({order[0]} first): {status}", flush=True)
+        layers = {side: traced_layers(trees[side], a.workload, base + a.pairs, seconds)
+                  for side in trees} if a.trace else {}
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -156,18 +187,24 @@ def main():
         print(f"{r['metric']:<12} {fmt('parent'):>30} {fmt('change'):>30} "
               f"{(f'{frac:+.1%}' if frac is not None else '-'):>8} "
               f"{r['change_wins']:>3}/{r['n']:<3}  {'yes' if r['gain'] else 'no ':<4}  {r['gate']}")
+    untraced = [side for side, got in layers.items() if got is None]
+    if untraced:
+        print(f"traced run failed or had wrong output: {', '.join(untraced)} (seed {base + a.pairs})")
+    elif layers:
+        print_layers(layers["parent"], layers["change"])
     bad = [r for r in runs if not r["correct"]]
     if bad:
         print(f"{len(bad)} run(s) failed or had wrong output: "
               + ", ".join(f"{r['side']} seed {r['seed']}" for r in bad))
     if a.out:
         Path(a.out).write_text(json.dumps({"workload": a.workload, "parent": a.parent,
-                                           "seconds": seconds, "runs": runs, "summary": rows},
+                                           "seconds": seconds, "runs": runs, "summary": rows,
+                                           "traced_layers": layers},
                                           indent=1))
     worse = [r["metric"] for r in rows if r["gate"] == "worse"]
     if worse:
         print("worse beyond the bound: " + ", ".join(worse))
-    sys.exit(1 if bad or worse else 0)
+    sys.exit(1 if bad or worse or untraced else 0)
 
 
 if __name__ == "__main__":
