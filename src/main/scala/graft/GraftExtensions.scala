@@ -15,7 +15,9 @@ import org.apache.spark.sql.graft.Bridge
   * bound is AQE's own: `CoalesceShufflePartitions` never aims below
   * that size, so it folds such a shuffle into one partition anyway, and
   * the rule changes no partition count, only the job that sampled the
-  * ranges. It adds no setting.
+  * ranges. It adds no setting. The bound is one predicate,
+  * `SmallSort.fitsOnePartition`, which `StreamIO.contentAddressedSink`
+  * also uses to write a small micro-batch without its shuffle.
   *
   * (The operators' per-session `register` helpers skip a name the
   * session already resolves, so on such a session they do nothing; on

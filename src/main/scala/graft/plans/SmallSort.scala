@@ -23,25 +23,38 @@ import org.apache.spark.sql.internal.SQLConf
   * does not sample. The rows, their order and the partition count of
   * the result are unchanged; the sampling job is gone.
   *
-  * It fires only when AQE coalescing is on and [[upperBound]] puts the
-  * exchange's input at or below AQE's own bound. Range exchanges the
-  * user asked for (`repartitionByRange(n, …)`) are not
-  * `ENSURE_REQUIREMENTS` and stay as they are; non-AQE plans (streaming
-  * micro-batches among them) never run query-stage prep rules.
+  * It fires only when [[fitsOnePartition]] holds for [[upperBound]] of
+  * the exchange's input. Range exchanges the user asked for
+  * (`repartitionByRange(n, …)`) are not `ENSURE_REQUIREMENTS` and stay
+  * as they are; non-AQE plans (streaming micro-batches among them)
+  * never run query-stage prep rules.
+  *
+  * The same bound has a second caller: `StreamIO.contentAddressedSink`
+  * writes a micro-batch that fits in one partition with `coalesce(1)`
+  * instead of its `repartition(key_prefix)` shuffle, for the same
+  * reason: AQE would fold that shuffle into one partition anyway.
   */
 object SmallSort {
 
   object UnsampledRange extends Rule[SparkPlan] {
-    override def apply(plan: SparkPlan): SparkPlan = {
-      if (!conf.coalesceShufflePartitionsEnabled) return plan
-      val bound = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    override def apply(plan: SparkPlan): SparkPlan =
       plan.transformUp {
         case s @ ShuffleExchangeExec(RangePartitioning(order, n), child, ENSURE_REQUIREMENTS, _)
-            if n > 1 && upperBound(child).exists(_ <= bound) =>
+            if n > 1 && upperBound(child).exists(fitsOnePartition(_, conf)) =>
           s.copy(outputPartitioning = RangePartitioning(order, 1))
       }
-    }
   }
+
+  /** Whether AQE folds a shuffle of at most `size` bytes into one
+    * partition under `conf`: AQE and its partition coalescing are on,
+    * and `size` is at most
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize`.
+    * `CoalesceShufflePartitions` never aims below that size, so such a
+    * shuffle always ends in one partition.
+    */
+  def fitsOnePartition(size: BigInt, conf: SQLConf): Boolean =
+    conf.adaptiveExecutionEnabled && conf.coalesceShufflePartitionsEnabled &&
+      size <= conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
 
   /** The planner's size estimate of `plan`'s output (runtime sizes for
     * materialized query stages), or None when it is not an upper bound.

@@ -12,8 +12,10 @@ import org.apache.spark.sql.connector.read.{
   PartitionReaderFactory,
   Scan,
   ScanBuilder,
+  Statistics,
   SupportsPushDownFilters,
-  SupportsPushDownRequiredColumns
+  SupportsPushDownRequiredColumns,
+  SupportsReportStatistics
 }
 import org.apache.spark.sql.connector.read.streaming.{
   CompositeReadLimit,
@@ -65,8 +67,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * pruning (`SupportsPushDownRequiredColumns`: `select(seq)` never
   * builds an envelope string), `seq`-range filter pushdown
   * (`SupportsPushDownFilters`: a `seq >= N` predicate shrinks the
-  * planned ranges — the DSv2 analog of partition pruning), and
-  * micro-batch streaming.
+  * planned ranges — the DSv2 analog of partition pruning), statistics
+  * (`SupportsReportStatistics`: row count and size of the narrowed
+  * range, which bound every micro-batch too), and micro-batch
+  * streaming.
   */
 class ProblemSource extends TableProvider {
 
@@ -98,6 +102,9 @@ object ProblemSource {
     Base64.getEncoder.encodeToString(
       s"""{"Num1":${num1(seq)},"Num2":${num2(seq)}}""".getBytes("UTF-8")
     )
+
+  /** The widest envelope: both operands of seq 99 have two digits. */
+  private[sources] val MaxEnvelopeChars: Int = envelope(99).length
 }
 
 private class ProblemTable extends Table with SupportsRead {
@@ -161,7 +168,10 @@ private class ProblemScanBuilder(numRows: Long, numPartitions: Int, rowsPerBatch
 
 /** One Scan serves both execution modes: `toBatch` reads the whole
   * (filter-narrowed) range at once; `toMicroBatchStream` replays the
-  * same range as offset-bounded micro-batches.
+  * same range as offset-bounded micro-batches. Its statistics describe
+  * the whole range, so they are an upper bound on every micro-batch:
+  * Spark asks the scan, not the batch, for a streaming relation's
+  * statistics.
   */
 private class ProblemScan(
     schema: StructType,
@@ -170,10 +180,26 @@ private class ProblemScan(
     numRows: Long,
     numPartitions: Int,
     rowsPerBatch: Long
-) extends Scan {
+) extends Scan
+    with SupportsReportStatistics {
 
   override def readSchema(): StructType = schema
   override def description(): String    = s"graft_problems range=[$lo,$hi) rowsPerBatch=$rowsPerBatch"
+
+  /** The widest row of `schema`, counted as Spark's
+    * `EstimationUtils.getSizePerRow` counts a row whose string lengths
+    * are known: 8 bytes per row, 8 per long, and a string's length + 12.
+    */
+  private val rowBytes: Long = 8L + schema.fieldNames.map {
+    case "seq"           => 8L
+    case "partition_key" => 2L + 12 // seq % 16: "0" .. "15"
+    case "data"          => ProblemSource.MaxEnvelopeChars + 12L
+  }.sum
+
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def numRows(): java.util.OptionalLong     = java.util.OptionalLong.of(hi - lo)
+    override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of((hi - lo) * rowBytes)
+  }
 
   /** Split [from, until) into at most numPartitions contiguous ranges,
     * sized by the FULL-table granule (numRows/numPartitions) so a

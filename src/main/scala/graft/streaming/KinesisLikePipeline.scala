@@ -771,7 +771,12 @@ object KinesisLikePipeline {
     * stand-in) → envelope decode → adder → content-addressed parquet
     * store, drained under `Trigger.AvailableNow` in
     * ⌈numRows/rowsPerBatch⌉ offset-bounded micro-batches, then read
-    * back as a batch DataFrame. The source is a pure function of seq,
+    * back as a batch DataFrame. ProblemSource reports the statistics of
+    * its whole range, so while that range's planner estimate is at most
+    * AQE's `coalescePartitions.minPartitionSize`, the sink writes each
+    * micro-batch as one file in one Spark job, with no shuffle (a few
+    * thousand rows; larger ranges keep the sink's prefix shuffle). The
+    * source is a pure function of seq,
     * so the correctness gate checks the WHOLE streaming path against a
     * generate_series oracle — connector, offset ranges, decode, math,
     * and sink all hash-verified.

@@ -1,7 +1,9 @@
 package graft.streaming
 
+import graft.plans.SmallSort
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Source/sink adapters for the reference's I/O surface, re-expressed
@@ -10,15 +12,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * | reference                          | here                               |
   * | ---------------------------------- | ---------------------------------- |
   * | Kinesis producer (kinesis_stream/main.go:24-37) | [[mathProblemStream]] rate-source envelope stream |
-  * | S3 content-addressed put (adder-labma/adder.go:58-76) | [[contentAddressedSink]] key-sorted parquet per micro-batch |
+  * | S3 content-addressed put (adder-labma/adder.go:58-76) | [[contentAddressedSink]] key-sorted parquet per micro-batch; one file, one job and no shuffle for a batch below AQE's minimum partition size |
   * | SQS SendMessageBatch of 10 (lambda_page/lpage.go:135-146) | [[batchedQueueSink]] fixed-size JSON batch lines |
   *
   * The reference writes ONE S3 object PER RECORD — at 100 TB that is
   * billions of tiny puts, the canonical small-object anti-pattern. The
   * scalable translation keeps the content-addressed KEY (a column) but
   * stores each micro-batch as key-sorted parquet: writes are batched
-  * columnar appends (one file per batch at small volume), and a lookup
-  * by key skips row groups on parquet's min/max statistics.
+  * columnar appends (one file per batch at small volume, written by one
+  * task without a shuffle), and a lookup by key skips row groups on
+  * parquet's min/max statistics.
   */
 object StreamIO {
 
@@ -47,13 +50,25 @@ object StreamIO {
   /** S3-analog sink: stream rows into parquet, one `b<batchId>`
     * directory per micro-batch, with a `key_prefix` column holding the
     * first `prefixChars` hex chars of `result_key`'s digest (the same
-    * fan-out trick S3 key design uses). Rows are clustered by
-    * `key_prefix` and sorted by (`key_prefix`, `result_key`) inside
-    * each file, so a key or prefix lookup prunes on parquet's min/max
-    * statistics rather than on directories. A batch dir holds one file
-    * per post-shuffle partition — one at small volume, more only when
-    * the batch is large — never one per prefix: each file a task
-    * creates costs a commit (a PUT on S3) whatever its size.
+    * fan-out trick S3 key design uses). Rows are sorted by
+    * (`key_prefix`, `result_key`) inside each file, so a key or prefix
+    * lookup prunes on parquet's min/max statistics rather than on
+    * directories. Never one file per prefix: each file a task creates
+    * costs a commit (a PUT on S3) whatever its size.
+    *
+    * Two layouts, chosen per batch by the bound
+    * [[graft.plans.SmallSort.fitsOnePartition]] shares with the sort rule:
+    *  - a batch whose planner size estimate is at most AQE's
+    *    `coalescePartitions.minPartitionSize` is `coalesce(1)`-ed: one
+    *    task writes one file, in one job with no shuffle. AQE would fold
+    *    a shuffle of that size into one partition anyway, so the rows,
+    *    their order in the file and the file count are those of the
+    *    shuffle path.
+    *  - a larger batch, or one whose source reports no size (the rate
+    *    source, `MemoryStream`), is `repartition(key_prefix)`-ed: each
+    *    prefix's rows land in one post-shuffle partition, so each file
+    *    covers a disjoint set of prefixes and file-level min/max pruning
+    *    still works when the batch spans several files.
     *
     * Exactly-once: the parquet commit protocol dedups TASK retries,
     * and each micro-batch owns its own overwrite-mode subdirectory so
@@ -76,15 +91,19 @@ object StreamIO {
         // strip the literal producer prefix only — md5 hex contains a-f,
         // so a greedy [a-z-]+ strip would also eat leading hex letters
         // of the digest and collapse the 256 prefixes to ~160
-        batch
-          .withColumn(
-            "key_prefix",
-            substring(regexp_replace(col("result_key"), "^(add|multi)-", ""), 1, prefixChars)
-          )
-          // cluster by prefix so each prefix's rows land in one task,
-          // then sort so every file is ordered by key: a prefix or key
-          // filter then prunes row groups on min/max statistics
-          .repartition(col("key_prefix"))
+        val keyed = batch.withColumn(
+          "key_prefix",
+          substring(regexp_replace(col("result_key"), "^(add|multi)-", ""), 1, prefixChars)
+        )
+        // a batch AQE would coalesce into one partition anyway is written
+        // by one task with no shuffle; a larger one, or one whose source
+        // reports no size, is clustered by prefix so each prefix's rows
+        // land in one task. Either way every file is then sorted by key,
+        // so a prefix or key filter prunes row groups on min/max statistics
+        val conf = keyed.sparkSession.sessionState.conf
+        val size = SQLConf.withExistingConf(conf)(keyed.queryExecution.optimizedPlan.stats.sizeInBytes)
+        (if (SmallSort.fitsOnePartition(size, conf)) keyed.coalesce(1)
+         else keyed.repartition(col("key_prefix")))
           .sortWithinPartitions("key_prefix", "result_key")
           .write
           .mode("overwrite")

@@ -1,32 +1,73 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import graft.streaming.{KinesisLikePipeline, StreamIO}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, MicroBatchExecution, StreamExecution}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.scalatest.BeforeAndAfterAll
 
-class StreamIOSpec extends SparkSpecBase {
+class StreamIOSpec extends SparkSpecBase with BeforeAndAfterAll {
 
-  private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
+  // every sink output and checkpoint lives under one root, removed when the suite ends
+  private lazy val root: Path             = Files.createTempDirectory("graft-streamio-spec")
+  private def tmp(prefix: String): String = Files.createTempDirectory(root, prefix).toString
+
+  override def afterAll(): Unit =
+    try deleteTree(root)
+    finally super.afterAll()
+
+  /** Starts a query with `start`, runs `drive` on it and returns the
+    * Spark jobs each of its micro-batches ran, by batch id (Spark tags a
+    * micro-batch's jobs with its query and batch ids).
+    */
+  private def jobsPerBatch(start: => StreamingQuery)(drive: StreamingQuery => Unit): Map[Long, Int] = {
+    val sc   = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[(String, Long)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        for (p <- Option(e.properties); b <- Option(p.getProperty(MicroBatchExecution.BATCH_ID_KEY)))
+          jobs.add((p.getProperty(StreamExecution.QUERY_ID_KEY), b.toLong))
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val q = start
+      drive(q)
+      ListenerBus.drain(sc)
+      jobs.asScala.toSeq.filter(_._1 == q.id.toString).groupBy(_._2).map { case (b, js) => b -> js.size }
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("content-addressed sink lands decoded answers in key-sorted parquet") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in  = MemoryStream[(String, String)]
     val out = tmp("graft-s3-out")
-    val q = StreamIO.contentAddressedSink(
-      KinesisLikePipeline.addAnswers(
-        KinesisLikePipeline.decodeEnvelope(in.toDF().toDF("partition_key", "data"))
-      ),
-      out,
-      tmp("graft-s3-ckpt")
-    )
     val env = (n1: Long, n2: Long) =>
       java.util.Base64.getEncoder.encodeToString(s"""{"Num1":$n1,"Num2":$n2}""".getBytes)
-    in.addData(("a", env(1, 2)), ("b", env(30, 12)))
-    q.processAllAvailable()
-    q.stop()
+    val jobs = jobsPerBatch(
+      StreamIO.contentAddressedSink(
+        KinesisLikePipeline.addAnswers(
+          KinesisLikePipeline.decodeEnvelope(in.toDF().toDF("partition_key", "data"))
+        ),
+        out,
+        tmp("graft-s3-ckpt")
+      )
+    ) { q =>
+      in.addData(("a", env(1, 2)), ("b", env(30, 12)))
+      q.processAllAvailable()
+      q.stop()
+    }
+    // MemoryStream reports no statistics, so its batch keeps the
+    // prefix shuffle: a shuffle-map job, then the write
+    assert(jobs == Map(0L -> 2), s"jobs per batch: $jobs")
     val rows = StreamIO.readContentAddressed(spark, out)
     assert(rows.count() == 2)
     assert(rows.columns.contains("key_prefix"))
@@ -34,9 +75,10 @@ class StreamIOSpec extends SparkSpecBase {
   }
 
   /** Drain 600 ProblemSource rows (three micro-batches) into a
-    * content-addressed sink and return its output dir.
+    * content-addressed sink; returns its output dir and the Spark jobs
+    * each micro-batch ran.
     */
-  private def drainToSink(prefixChars: Int): String = {
+  private def drainToSink(prefixChars: Int): (String, Map[Long, Int]) = {
     val out = tmp("graft-s3-layout")
     val records = spark.readStream
       .format("graft.sources.ProblemSource")
@@ -44,28 +86,29 @@ class StreamIOSpec extends SparkSpecBase {
       .option("numPartitions", 4)
       .option("rowsPerBatch", 200)
       .load()
-    StreamIO
-      .contentAddressedSink(
+    val jobs = jobsPerBatch(
+      StreamIO.contentAddressedSink(
         KinesisLikePipeline.addAnswers(KinesisLikePipeline.decodeEnvelope(records), keyCol = "seq"),
         out,
         tmp("graft-s3-layout-ckpt"),
         availableNow = true,
         prefixChars = prefixChars
       )
-      .awaitTermination()
-    out
+    )(_.awaitTermination())
+    (out, jobs)
   }
 
-  test("content-addressed sink writes key-sorted files per batch and pushes prefix filters") {
-    import scala.jdk.CollectionConverters._
-    def ls(p: java.nio.file.Path): List[java.nio.file.Path] = {
-      val s = Files.list(p)
-      try s.iterator().asScala.toList finally s.close()
-    }
-    val out     = drainToSink(prefixChars = 1)
-    val batches = ls(java.nio.file.Paths.get(out)).filter(_.getFileName.toString.matches("b\\d+"))
-    assert(batches.size == 3, s"expected three batch dirs, got $batches")
-    batches.foreach { b =>
+  private def ls(p: Path): List[Path] = {
+    val s = Files.list(p)
+    try s.iterator().asScala.toList finally s.close()
+  }
+
+  /** The parquet files of each `b<id>` dir under `out`, after checking
+    * that the dir holds no prefix partition dirs and that every file is
+    * ordered by (`key_prefix`, `result_key`).
+    */
+  private def sortedBatchFiles(out: String): Map[String, List[Path]] =
+    ls(Paths.get(out)).filter(_.getFileName.toString.matches("b\\d+")).map { b =>
       val children = ls(b)
       assert(!children.exists(_.getFileName.toString.startsWith("key_prefix=")),
         s"$b still holds prefix partition dirs")
@@ -76,7 +119,17 @@ class StreamIOSpec extends SparkSpecBase {
           .map(r => (r.getString(0), r.getString(1))).toSeq
         assert(keys == keys.sorted, s"$f is not ordered by (key_prefix, result_key)")
       }
-    }
+      b.getFileName.toString -> files
+    }.toMap
+
+  test("content-addressed sink writes key-sorted files per batch and pushes prefix filters") {
+    val (out, jobs) = drainToSink(prefixChars = 1)
+    // each batch is below AQE's minimum partition size: one task writes
+    // it, with no shuffle, in one job and one file
+    assert(jobs == Map(0L -> 1, 1L -> 1, 2L -> 1), s"jobs per batch: $jobs")
+    val files = sortedBatchFiles(out)
+    assert(files.keySet == Set("b0", "b1", "b2"), s"expected three batch dirs, got ${files.keySet}")
+    assert(files.values.forall(_.size == 1), s"expected one file per batch: $files")
 
     val all = StreamIO.readContentAddressed(spark, out)
       .select("seq", "result_key").collect().map(r => (r.getLong(0), r.getString(1)))
@@ -90,8 +143,24 @@ class StreamIOSpec extends SparkSpecBase {
     assert(prefixA.select("seq").collect().map(_.getLong(0)).toSet == expected)
   }
 
+  test("above the bound each micro-batch keeps its prefix shuffle, with the same rows") {
+    def rows(out: String) =
+      StreamIO.readContentAddressed(spark, out).orderBy("seq").collect().toSeq
+    val (small, oneJob) = drainToSink(prefixChars = 1)
+    val (large, twoJobs) = GraftSession.withConfs(
+      spark,
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b"
+    )(drainToSink(prefixChars = 1))
+    assert(oneJob == Map(0L -> 1, 1L -> 1, 2L -> 1), s"jobs per batch: $oneJob")
+    // a shuffle-map job, then the write
+    assert(twoJobs == Map(0L -> 2, 1L -> 2, 2L -> 2), s"jobs per batch with a 1-byte bound: $twoJobs")
+    assert(sortedBatchFiles(large).keySet == sortedBatchFiles(small).keySet)
+    val (got, expected) = (rows(large), rows(small))
+    assert(got.size == 600 && got == expected)
+  }
+
   test("content-addressed sink round-trips at the default 2-char prefix width") {
-    val rows = StreamIO.readContentAddressed(spark, drainToSink(prefixChars = 2))
+    val rows = StreamIO.readContentAddressed(spark, drainToSink(prefixChars = 2)._1)
       .select("seq", "result_key", "key_prefix").collect()
     assert(rows.map(_.getLong(0)).sorted.toSeq == (0L until 600L))
     rows.foreach { r =>

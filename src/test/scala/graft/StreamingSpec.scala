@@ -86,6 +86,46 @@ class StreamingSpec extends SparkSpecBase {
     assert(sizes.length == 4, s"expected 300+300+300+100 pacing, got: $sizes")
   }
 
+  test("DSv2 problem source's statistics bound every micro-batch and the narrowed batch read") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.plans.logical.Statistics
+    // a row's bytes as Spark's getSizePerRow counts a row with known string lengths
+    def bytes(r: Row): Long = 8L + 8 + (r.getString(1).length + 12) + (r.getString(2).length + 12)
+    val seen       = scala.collection.mutable.ArrayBuffer[(Statistics, Long, Long)]()
+    val checkpoint = Files.createTempDirectory("graft-ckpt")
+    try {
+      spark.readStream
+        .format("graft.sources.ProblemSource")
+        .option("numRows", 1000)
+        .option("numPartitions", 4)
+        .option("rowsPerBatch", 300)
+        .load()
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          val rows = b.collect()
+          seen += ((b.queryExecution.optimizedPlan.stats, rows.length.toLong, rows.map(bytes).sum)): Unit
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .option("checkpointLocation", checkpoint.toString)
+        .start()
+        .awaitTermination()
+    } finally deleteTree(checkpoint)
+    assert(seen.map(_._2).sum == 1000 && seen.size == 4, s"unexpected batches: ${seen.map(_._2)}")
+    seen.foreach { case (stats, rows, size) =>
+      assert(stats.rowCount.exists(_ >= rows), s"$stats reports fewer than $rows rows")
+      assert(stats.sizeInBytes >= size, s"$stats reports fewer than $size bytes")
+    }
+    // a batch read reports the filter-narrowed range and the pruned columns
+    val narrowed = spark.read
+      .format("graft.sources.ProblemSource")
+      .option("numRows", 1000)
+      .load()
+      .filter(col("seq") >= 900)
+      .select("seq")
+    val scan = narrowed.queryExecution.optimizedPlan.collectLeaves().head.stats
+    assert(scan.rowCount.contains(BigInt(100)) && scan.sizeInBytes == 100 * (8 + 8), s"$scan")
+  }
+
   test("DSv2 problem source resumes from the checkpointed offset after restart") {
     import spark.implicits._
     val checkpoint = ckpt()

@@ -1,30 +1,35 @@
 #!/usr/bin/env python3
-"""A/B-compares a parent commit with the current checkout on one benchmark workload.
+"""A/B-compares a parent commit with the current checkout on the benchmark's workloads.
 
+    python3 tools/perf_ab.py <parent-ref> --pairs 10
     python3 tools/perf_ab.py <parent-ref> --workload kinesis_stream --pairs 10
 
 Run it from the root of a graft checkout. The parent ref is exported
 with `git archive` into a temporary directory, and `perfbench/run.py`
-runs on both trees with the same arguments. Each pair uses a fresh seed,
-and the side that runs first alternates from pair to pair. For every
-end-to-end metric that BENCHMARK.json declares, the script prints each
-side's median and quartiles and how many pairs the change won, and
-calls a gain only when the change won at least nine tenths of the pairs
-and the medians differ by more than the parent's quartile distance.
+runs on both trees with the same arguments. `--workload` may be given
+more than once; without it, every workload in BENCHMARK.json runs. Each
+pair uses a fresh seed and runs every workload on both sides, and the
+side that runs first alternates from pair to pair. For every workload
+and every end-to-end metric that BENCHMARK.json declares, the script
+prints each side's median and quartiles and how many pairs the change
+won, and calls a gain only when the change won at least nine tenths of
+the pairs and the medians differ by more than the parent's quartile
+distance.
 
-It also applies the no-regression rule to each metric that has a
-`bound` (a fraction of the parent's median): the gate column reads
-`worse` when the change's median is worse than the parent's by more than
-the bound, `unresolved` when the parent's quartile spread is wider than
-the bound (the runs spread too widely to tell), and `ok` otherwise. The
-script exits nonzero when a metric is `worse` or a run failed.
+It also applies the no-regression rule, per workload, to each metric
+that has a `bound` (a fraction of the parent's median): the gate column
+reads `worse` when the change's median is worse than the parent's by
+more than the bound, `unresolved` when the parent's quartile spread is
+wider than the bound (the runs spread too widely to tell), and `ok`
+otherwise. The script exits nonzero when a metric of any workload is
+`worse` or a run failed.
 
-With `--trace`, it then makes one `--trace 1` run per side on one seed
-and prints each per-layer metric of the two reports side by side with
-its change (`spark.jobs`, `spark.job_ms`, ..., and the workload's
-per-operation `operators.*_ms`), so a speed claim can name the layer
-that moved. One traced run per side shows where time went, not that
-it moved: the pairs make that case.
+With `--trace`, it then makes one `--trace 1` run per side and workload
+on one seed and prints each per-layer metric of the two reports side by
+side with its change (`spark.jobs`, `spark.job_ms`, ..., and the
+workload's per-operation `operators.*_ms`), so a speed claim can name
+the layer that moved. One traced run per side shows where time went,
+not that it moved: the pairs make that case.
 """
 
 import argparse
@@ -126,59 +131,8 @@ def gate(bound, pq, worsening):
     return "ok"
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("parent", help="git ref of the parent commit")
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--pairs", type=int, default=10)
-    ap.add_argument("--seconds", type=float, default=None,
-                    help="per-run --seconds (default: BENCHMARK.json run_seconds)")
-    ap.add_argument("--seed-base", type=int, default=None,
-                    help="pair i uses seed base+i (default: random)")
-    ap.add_argument("--out", help="also write every run and the summary to this JSON file")
-    ap.add_argument("--trace", action="store_true",
-                    help="then make one --trace 1 run per side and print per-layer deltas")
-    a = ap.parse_args()
-
-    bench = json.loads((ROOT / "BENCHMARK.json").read_text())
-    seconds = a.seconds if a.seconds is not None else bench["run_seconds"]
-    base = a.seed_base if a.seed_base is not None else random.randrange(1000, 1_000_000)
-    metrics = bench["end_to_end"]
-
-    scratch = Path(tempfile.mkdtemp(prefix="graft-perf-ab-"))
-    runs, pairs = [], []
-    try:
-        parent_tree = scratch / "parent"
-        export_tree(a.parent, parent_tree)
-        trees = {"parent": parent_tree, "change": ROOT}
-        for i in range(a.pairs):
-            seed = base + i
-            order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
-            got = {}
-            for side in order:
-                res = run_side(trees[side], a.workload, seed, seconds)
-                ok = res is not None and res["correct"]
-                vals = {k: v["value"] for k, v in res["metrics"].items()} if res else {}
-                runs.append({"pair": i, "side": side, "seed": seed, "correct": ok,
-                             "attempted": res and res["attempted"], "failed": res and res["failed"],
-                             "metrics": vals})
-                if ok:
-                    got[side] = vals
-            if len(got) == 2:
-                pairs.append((got["parent"], got["change"]))
-                status = "  ".join(f"{m['name']} {got['parent'][m['name']]:.3f}->"
-                                   f"{got['change'][m['name']]:.3f}" for m in metrics)
-            else:
-                status = "incomplete (a run failed or had wrong output)"
-            print(f"pair {i + 1}/{a.pairs} seed {seed} ({order[0]} first): {status}", flush=True)
-        layers = {side: traced_layers(trees[side], a.workload, base + a.pairs, seconds)
-                  for side in trees} if a.trace else {}
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-
-    rows = summarize(metrics, pairs)
-    print(f"\n{a.workload}: {len(pairs)} complete pairs of {a.pairs}, seeds {base}..{base + a.pairs - 1}, "
-          f"--seconds {seconds:g}, parent {a.parent} vs working tree")
+def print_summary(workload, rows):
+    print(f"\n{workload}")
     print(f"{'metric':<12} {'parent median [q1, q3]':>30} {'change median [q1, q3]':>30} "
           f"{'change':>8} {'wins':>7}  gain  gate")
     for r in rows:
@@ -187,21 +141,84 @@ def main():
         print(f"{r['metric']:<12} {fmt('parent'):>30} {fmt('change'):>30} "
               f"{(f'{frac:+.1%}' if frac is not None else '-'):>8} "
               f"{r['change_wins']:>3}/{r['n']:<3}  {'yes' if r['gain'] else 'no ':<4}  {r['gate']}")
-    untraced = [side for side, got in layers.items() if got is None]
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("parent", help="git ref of the parent commit")
+    ap.add_argument("--workload", action="append",
+                    help="a workload to run; repeat for more (default: every workload in BENCHMARK.json)")
+    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--seconds", type=float, default=None,
+                    help="per-run --seconds (default: BENCHMARK.json run_seconds)")
+    ap.add_argument("--seed-base", type=int, default=None,
+                    help="pair i uses seed base+i (default: random)")
+    ap.add_argument("--out", help="also write every run and the summary to this JSON file")
+    ap.add_argument("--trace", action="store_true",
+                    help="then make one --trace 1 run per side and workload and print per-layer deltas")
+    a = ap.parse_args()
+
+    bench = json.loads((ROOT / "BENCHMARK.json").read_text())
+    seconds = a.seconds if a.seconds is not None else bench["run_seconds"]
+    base = a.seed_base if a.seed_base is not None else random.randrange(1000, 1_000_000)
+    metrics = bench["end_to_end"]
+    workloads = a.workload or [w["name"] for w in bench["workloads"]]
+
+    scratch = Path(tempfile.mkdtemp(prefix="graft-perf-ab-"))
+    runs, pairs = [], {w: [] for w in workloads}
+    try:
+        parent_tree = scratch / "parent"
+        export_tree(a.parent, parent_tree)
+        trees = {"parent": parent_tree, "change": ROOT}
+        for i in range(a.pairs):
+            seed = base + i
+            order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
+            for w in workloads:
+                got = {}
+                for side in order:
+                    res = run_side(trees[side], w, seed, seconds)
+                    ok = res is not None and res["correct"]
+                    vals = {k: v["value"] for k, v in res["metrics"].items()} if res else {}
+                    runs.append({"workload": w, "pair": i, "side": side, "seed": seed, "correct": ok,
+                                 "attempted": res and res["attempted"], "failed": res and res["failed"],
+                                 "metrics": vals})
+                    if ok:
+                        got[side] = vals
+                if len(got) == 2:
+                    pairs[w].append((got["parent"], got["change"]))
+                    status = "  ".join(f"{m['name']} {got['parent'][m['name']]:.3f}->"
+                                       f"{got['change'][m['name']]:.3f}" for m in metrics)
+                else:
+                    status = "incomplete (a run failed or had wrong output)"
+                print(f"pair {i + 1}/{a.pairs} seed {seed} {w} ({order[0]} first): {status}", flush=True)
+        layers = {w: {side: traced_layers(trees[side], w, base + a.pairs, seconds) for side in trees}
+                  for w in workloads} if a.trace else {}
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+    rows = {w: summarize(metrics, pairs[w]) for w in workloads}
+    print(f"\n{a.pairs} pairs, seeds {base}..{base + a.pairs - 1}, --seconds {seconds:g}, "
+          f"parent {a.parent} vs working tree; complete pairs: "
+          + ", ".join(f"{w} {len(pairs[w])}" for w in workloads))
+    for w in workloads:
+        print_summary(w, rows[w])
+    untraced = [f"{w} {side}" for w, sides in layers.items() for side, got in sides.items() if got is None]
     if untraced:
         print(f"traced run failed or had wrong output: {', '.join(untraced)} (seed {base + a.pairs})")
-    elif layers:
-        print_layers(layers["parent"], layers["change"])
+    for w, sides in layers.items():
+        if None not in sides.values():
+            print(f"\n{w}:", end="")
+            print_layers(sides["parent"], sides["change"])
     bad = [r for r in runs if not r["correct"]]
     if bad:
         print(f"{len(bad)} run(s) failed or had wrong output: "
-              + ", ".join(f"{r['side']} seed {r['seed']}" for r in bad))
+              + ", ".join(f"{r['workload']} {r['side']} seed {r['seed']}" for r in bad))
     if a.out:
-        Path(a.out).write_text(json.dumps({"workload": a.workload, "parent": a.parent,
+        Path(a.out).write_text(json.dumps({"workloads": workloads, "parent": a.parent,
                                            "seconds": seconds, "runs": runs, "summary": rows,
                                            "traced_layers": layers},
                                           indent=1))
-    worse = [r["metric"] for r in rows if r["gate"] == "worse"]
+    worse = [f"{w} {r['metric']}" for w in workloads for r in rows[w] if r["gate"] == "worse"]
     if worse:
         print("worse beyond the bound: " + ", ".join(worse))
     sys.exit(1 if bad or worse or untraced else 0)
