@@ -38,4 +38,20 @@ object Bridge {
     org.apache.spark.SparkContext.getActive.foreach { sc =>
       confs.foreach { case (k, v) => sc.conf.setIfMissing(k, v) }
     }
+
+  /** [[hadoopConfIfMissing]] on the active SparkContext's Hadoop conf,
+    * which every session's Hadoop conf copies. A no-op when no context
+    * is active.
+    */
+  def contextHadoopConfIfMissing(confs: Iterable[(String, String)]): Unit =
+    org.apache.spark.SparkContext.getActive.foreach(sc => hadoopConfIfMissing(sc.hadoopConfiguration, confs))
+
+  /** Default `confs` on `conf`, keeping any value that was set
+    * explicitly (`spark.hadoop.*`, a `*-site.xml`, code). A value that
+    * only Hadoop's `core-default.xml` gives does not count as set.
+    */
+  def hadoopConfIfMissing(conf: org.apache.hadoop.conf.Configuration, confs: Iterable[(String, String)]): Unit =
+    confs.foreach { case (k, v) =>
+      if (Option(conf.getPropertySources(k)).forall(_.forall(_ == "core-default.xml"))) conf.set(k, v, "graft")
+    }
 }

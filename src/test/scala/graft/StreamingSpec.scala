@@ -9,13 +9,21 @@ import graft.streaming.KinesisLikePipeline.TopicMsg
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.scalatest.BeforeAndAfterAll
 
 /** MemoryStream specs for the A14 streaming pipeline: envelope decode →
   * math, watermarked windowed agg, stateful page sequencer.
   */
-class StreamingSpec extends SparkSpecBase {
+class StreamingSpec extends SparkSpecBase with BeforeAndAfterAll {
 
-  private def ckpt(): String = Files.createTempDirectory("graft-ckpt").toString
+  // every checkpoint, sink and input dir lives under one root, removed when the suite ends
+  private lazy val root: java.nio.file.Path          = Files.createTempDirectory("graft-streaming-spec")
+  private def tmp(prefix: String): java.nio.file.Path = Files.createTempDirectory(root, prefix)
+  private def ckpt(): String                          = tmp("graft-ckpt").toString
+
+  override def afterAll(): Unit =
+    try deleteTree(root)
+    finally super.afterAll()
 
   private def envelope(n1: Long, n2: Long): String =
     Base64.getEncoder.encodeToString(s"""{"Num1":$n1,"Num2":$n2}""".getBytes("UTF-8"))
@@ -92,24 +100,22 @@ class StreamingSpec extends SparkSpecBase {
     // a row's bytes as Spark's getSizePerRow counts a row with known string lengths
     def bytes(r: Row): Long = 8L + 8 + (r.getString(1).length + 12) + (r.getString(2).length + 12)
     val seen       = scala.collection.mutable.ArrayBuffer[(Statistics, Long, Long)]()
-    val checkpoint = Files.createTempDirectory("graft-ckpt")
-    try {
-      spark.readStream
-        .format("graft.sources.ProblemSource")
-        .option("numRows", 1000)
-        .option("numPartitions", 4)
-        .option("rowsPerBatch", 300)
-        .load()
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          val rows = b.collect()
-          seen += ((b.queryExecution.optimizedPlan.stats, rows.length.toLong, rows.map(bytes).sum)): Unit
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", checkpoint.toString)
-        .start()
-        .awaitTermination()
-    } finally deleteTree(checkpoint)
+    val checkpoint = ckpt()
+    spark.readStream
+      .format("graft.sources.ProblemSource")
+      .option("numRows", 1000)
+      .option("numPartitions", 4)
+      .option("rowsPerBatch", 300)
+      .load()
+      .writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        val rows = b.collect()
+        seen += ((b.queryExecution.optimizedPlan.stats, rows.length.toLong, rows.map(bytes).sum)): Unit
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint)
+      .start()
+      .awaitTermination()
     assert(seen.map(_._2).sum == 1000 && seen.size == 4, s"unexpected batches: ${seen.map(_._2)}")
     seen.foreach { case (stats, rows, size) =>
       assert(stats.rowCount.exists(_ >= rows), s"$stats reports fewer than $rows rows")
@@ -560,7 +566,7 @@ class StreamingSpec extends SparkSpecBase {
     // docs become part of the index the NEXT batch probes — the
     // self-referential online refresh (stream → verdicts → index
     // append), state held in the store rather than join state
-    val idxDir = Files.createTempDirectory("graft-idx").toString
+    val idxDir = tmp("graft-idx").toString
     Seq((1L, "alpha beta gamma")).toDF("doc_id", "text")
       .select(col("doc_id"), graft.operators.Dedup.normTextHashCol.as("text_hash"))
       .write.mode("overwrite").parquet(idxDir)
@@ -836,8 +842,8 @@ class StreamingSpec extends SparkSpecBase {
     import java.nio.file.attribute.FileTime
     import org.apache.spark.sql.streaming.Trigger
     import spark.implicits._
-    val tmp   = Files.createTempDirectory("graft-restart")
-    val inDir = Files.createDirectories(tmp.resolve("in"))
+    val run   = tmp("graft-restart")
+    val inDir = Files.createDirectories(run.resolve("in"))
     // 4 time-ordered slices of 300 rows + a far-future flush sentinel,
     // mtimes pin FileStreamSource admission order (one per micro-batch)
     val base = Timestamp.valueOf("2026-01-01 00:00:00").getTime
@@ -855,8 +861,8 @@ class StreamingSpec extends SparkSpecBase {
     writeSlice(5, Seq((-2L, Timestamp.valueOf("2026-04-01 00:00:00"), -1L, "_flush", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props"))
 
-    val out = tmp.resolve("out").toString
-    val ck  = tmp.resolve("ck").toString
+    val out = run.resolve("out").toString
+    val ck  = run.resolve("ck").toString
     def startQuery() = KinesisLikePipeline
       .windowedCounts(
         spark.readStream.schema(graft.streaming.StreamReplay.eventsDdl)
@@ -994,44 +1000,34 @@ class StreamingSpec extends SparkSpecBase {
   test("foreachBatch drain: crash mid-batch, resume with same dirs, no duplicated partials") {
     import graft.streaming.{StreamReplay => SR}
     val inDir = SR.documentsModSlices(spark, sfDir, 4)
-    val run   = java.nio.file.Files.createTempDirectory("drain_restart")
-    try {
-      val out  = run.resolve("out").toString
-      val ckpt = run.resolve("ckpt")
-      def partial(batch: org.apache.spark.sql.DataFrame, epoch: Long) =
-        graft.operators.Curation.driftPartial(batch, epoch)
-      // first attempt dies INSIDE batch 2's sink write, after batches
-      // 0-1 committed (and after batch 2 may have partially written)
-      val boom = new java.util.concurrent.atomic.AtomicBoolean(true)
-      val failed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        SR.drainForeachBatchAt(spark, inDir, SR.documentsDdl, out, ckpt) { (b, id) =>
-          val p = partial(b, id)
-          if (id == 2L && boom.getAndSet(false)) {
-            p.write.mode("overwrite").parquet(s"$out/b$id") // partial sink output lands
-            throw new RuntimeException("injected crash after sink write, before commit")
-          }
-          p
+    val run   = tmp("drain_restart")
+    val out   = run.resolve("out").toString
+    val ckpt  = run.resolve("ckpt")
+    def partial(batch: org.apache.spark.sql.DataFrame, epoch: Long) =
+      graft.operators.Curation.driftPartial(batch, epoch)
+    // first attempt dies INSIDE batch 2's sink write, after batches
+    // 0-1 committed (and after batch 2 may have partially written)
+    val boom = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val failed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      SR.drainForeachBatchAt(spark, inDir, SR.documentsDdl, out, ckpt) { (b, id) =>
+        val p = partial(b, id)
+        if (id == 2L && boom.getAndSet(false)) {
+          p.write.mode("overwrite").parquet(s"$out/b$id") // partial sink output lands
+          throw new RuntimeException("injected crash after sink write, before commit")
         }
+        p
       }
-      assert(failed.getMessage.contains("injected crash") ||
-        Option(failed.getCause).exists(_.getMessage.contains("injected crash")))
-      // resume against the SAME dirs: committed batches 0-1 must not
-      // re-run; batch 2's replay must overwrite, not append
-      val resumed = SR.drainForeachBatchAt(spark, inDir, SR.documentsDdl, out, ckpt)(partial)
-        .collect().map(r => (r.getLong(2), r.getLong(0), r.getLong(1))).sorted.toSeq
-      val clean = SR.replayDocumentsBatches(spark, sfDir)(partial)
-        .collect().map(r => (r.getLong(2), r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(resumed == clean,
-        s"crash-resume drain diverged from a clean drain:\nresumed=$resumed\nclean  =$clean")
-    } finally {
-      // outside StreamReplay's shutdown-cleaned root — delete here or
-      // every suite run leaves a /tmp/drain_restart* tree behind
-      import scala.jdk.CollectionConverters._
-      val files = java.nio.file.Files.walk(run)
-      try files.iterator().asScala.toSeq.reverseIterator
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
-      finally files.close()
     }
+    assert(failed.getMessage.contains("injected crash") ||
+      Option(failed.getCause).exists(_.getMessage.contains("injected crash")))
+    // resume against the SAME dirs: committed batches 0-1 must not
+    // re-run; batch 2's replay must overwrite, not append
+    val resumed = SR.drainForeachBatchAt(spark, inDir, SR.documentsDdl, out, ckpt)(partial)
+      .collect().map(r => (r.getLong(2), r.getLong(0), r.getLong(1))).sorted.toSeq
+    val clean = SR.replayDocumentsBatches(spark, sfDir)(partial)
+      .collect().map(r => (r.getLong(2), r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(resumed == clean,
+      s"crash-resume drain diverged from a clean drain:\nresumed=$resumed\nclean  =$clean")
   }
 
   test("streaming drift trajectory: final epoch equals the batch versionDrift; ppm monotone-safe") {
